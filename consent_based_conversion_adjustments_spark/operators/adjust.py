@@ -51,6 +51,77 @@ def softmax_weights(
     )
 
 
+def _pair_aggs(weighted_pairs: DataFrame, build_id: str, consent_id: str):
+    """Per-consent aggregates of a weighted pair frame (the scatter-add)."""
+    return weighted_pairs.groupBy(F.col(build_id).alias(consent_id)).agg(
+        F.sum(WEIGHTED_VALUE).alias("adjusted_conversion"),
+        F.sum(DISTANCE).alias("__sum_distance"),
+        F.count(F.lit(1)).alias("n_added_conversions"),
+        F.sum(WEIGHT).alias("sum_distribution_weights"),
+    )
+
+
+def _onto_consent(
+    consent: DataFrame,
+    aggs: DataFrame,
+    smear: float | DataFrame | None,
+    *,
+    consent_id: str,
+    conversion_column: str,
+) -> DataFrame:
+    """The tail every scatter-add shares: left-join the per-consent
+    aggregates (``adjusted_conversion``, ``__sum_distance``,
+    ``n_added_conversions``, ``sum_distribution_weights``) onto the consent
+    rows, zero-fill the unmatched, derive ``average_distance`` and add the
+    naive uniform smear.
+
+    ``smear``: a float already divided by |consent|; a 1-row
+    ``__total_matched`` frame, divided by |consent| in-plan through two
+    broadcast cross joins (fully lazy — no driver round-trip re-running
+    the similarity join per scalar); or None for no baseline column.
+    """
+    out = consent.join(aggs, on=consent_id, how="left")
+    out = out.fillna(
+        {
+            "adjusted_conversion": 0.0,
+            "n_added_conversions": 0,
+            "sum_distribution_weights": 0.0,
+        }
+    )
+    out = out.withColumn(
+        "average_distance",
+        F.when(
+            F.col("n_added_conversions") > 0,
+            F.col("__sum_distance") / F.col("n_added_conversions"),
+        ),
+    ).drop("__sum_distance")
+    if smear is None:
+        return out
+    if not isinstance(smear, DataFrame):
+        return out.withColumn(
+            "naive_adjusted_conversion",
+            F.col(conversion_column) + F.lit(float(smear)),
+        )
+    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
+    return (
+        out.crossJoin(F.broadcast(smear))
+        .crossJoin(F.broadcast(n_consent))
+        .withColumn(
+            "naive_adjusted_conversion",
+            F.col(conversion_column)
+            + F.col("__total_matched") / F.col("__n_consent"),
+        )
+        .drop("__total_matched", "__n_consent")
+    )
+
+
+def _total_matched(values: DataFrame, column: str) -> DataFrame:
+    """1-row ``__total_matched`` frame: Σ ``column`` (0 when empty)."""
+    return values.agg(
+        F.coalesce(F.sum(column), F.lit(0.0)).alias("__total_matched")
+    )
+
+
 def scatter_add(
     consent: DataFrame,
     weighted_pairs: DataFrame,
@@ -76,34 +147,16 @@ def scatter_add(
     - ``naive_adjusted_conversion``— conversion + (Σ matched probe values /
       n_consent): the uniform-smear baseline (W3)
     """
-    aggs = weighted_pairs.groupBy(F.col(build_id).alias(consent_id)).agg(
-        F.sum(WEIGHTED_VALUE).alias("adjusted_conversion"),
-        F.sum(DISTANCE).alias("__sum_distance"),
-        F.count(F.lit(1)).alias("n_added_conversions"),
-        F.sum(WEIGHT).alias("sum_distribution_weights"),
-    )
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
+    smear = None
     if total_matched_value is not None and n_consent is not None:
-        naive = total_matched_value / n_consent
-        out = out.withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column) + F.lit(float(naive)),
-        )
-    return out
+        smear = total_matched_value / n_consent
+    return _onto_consent(
+        consent,
+        _pair_aggs(weighted_pairs, build_id, consent_id),
+        smear,
+        consent_id=consent_id,
+        conversion_column=conversion_column,
+    )
 
 
 def distribute_conversions(
@@ -125,46 +178,16 @@ def distribute_conversions(
     weighted = softmax_weights(
         pairs, probe_id=probe_id, conversion_column=conversion_column
     )
-    aggs = weighted.groupBy(F.col(build_id).alias(consent_id)).agg(
-        F.sum(WEIGHTED_VALUE).alias("adjusted_conversion"),
-        F.sum(DISTANCE).alias("__sum_distance"),
-        F.count(F.lit(1)).alias("n_added_conversions"),
-        F.sum(WEIGHT).alias("sum_distribution_weights"),
+    total_matched = _total_matched(
+        weighted.select(probe_id, conversion_column).dropDuplicates([probe_id]),
+        conversion_column,
     )
-    total_matched = (
-        weighted.select(probe_id, conversion_column)
-        .dropDuplicates([probe_id])
-        .agg(
-            F.coalesce(F.sum(conversion_column), F.lit(0.0)).alias(
-                "__total_matched"
-            )
-        )
-    )
-    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
-    return (
-        out.crossJoin(F.broadcast(total_matched))
-        .crossJoin(F.broadcast(n_consent))
-        .withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column)
-            + F.col("__total_matched") / F.col("__n_consent"),
-        )
-        .drop("__total_matched", "__n_consent")
+    return _onto_consent(
+        consent,
+        _pair_aggs(weighted, build_id, consent_id),
+        total_matched,
+        consent_id=consent_id,
+        conversion_column=conversion_column,
     )
 
 
@@ -237,39 +260,16 @@ def distribute_from_class_pairs(
             "sum_distribution_weights"
         ),
     )
-    total_matched = (
-        probe_classes.join(class_pairs.select(key).distinct(), key)
-        .agg(
-            F.coalesce(F.sum("__convsum"), F.lit(0.0)).alias(
-                "__total_matched"
-            )
-        )
+    total_matched = _total_matched(
+        probe_classes.join(class_pairs.select(key).distinct(), key),
+        "__convsum",
     )
-    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
-    return (
-        out.crossJoin(F.broadcast(total_matched))
-        .crossJoin(F.broadcast(n_consent))
-        .withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column)
-            + F.col("__total_matched") / F.col("__n_consent"),
-        )
-        .drop("__total_matched", "__n_consent")
+    return _onto_consent(
+        consent,
+        aggs,
+        total_matched,
+        consent_id=consent_id,
+        conversion_column=conversion_column,
     )
 
 
@@ -294,34 +294,10 @@ def distribute_from_partials(
         F.sum("n_partial").alias("n_added_conversions"),
         F.sum("weight_partial").alias("sum_distribution_weights"),
     )
-    total_matched = partials.agg(
-        F.coalesce(F.sum("matched_value_partial"), F.lit(0.0)).alias(
-            "__total_matched"
-        )
-    )
-    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
-    return (
-        out.crossJoin(F.broadcast(total_matched))
-        .crossJoin(F.broadcast(n_consent))
-        .withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column)
-            + F.col("__total_matched") / F.col("__n_consent"),
-        )
-        .drop("__total_matched", "__n_consent")
+    return _onto_consent(
+        consent,
+        aggs,
+        _total_matched(partials, "matched_value_partial"),
+        consent_id=consent_id,
+        conversion_column=conversion_column,
     )

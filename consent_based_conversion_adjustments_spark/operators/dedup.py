@@ -909,14 +909,6 @@ def _admit_relations_collapsed(
     return rel, rejected_new, sc
 
 
-def _ADMIT_CKPT_STRATEGY() -> str:
-    """Per-round store-checkpoint strategy: "delta" (r14 default — one
-    O(batch) wide delta checkpoint) or "full" (pre-r14 full-union
-    rewrite, kept for reproducible A/Bs via ``COCOA_ADMIT_CKPT=full``).
-    Read per call so a harness can flip it without re-importing."""
-    return os.environ.get("COCOA_ADMIT_CKPT", "delta")
-
-
 def admit_batch(
     new: DataFrame,
     store_sigs: DataFrame,
@@ -968,9 +960,7 @@ def admit_batch(
     pipeline's only remaining superlinear-at-depth cost. Scan legs grow
     by one per in-session round — callers chaining MANY rounds should
     still flush to tables (`streaming.admission`), where parquet
-    appends give the O(batch) write AND compact scans.
-    ``COCOA_ADMIT_CKPT=full`` restores the full-union strategy (the
-    reproducible A/B lever; results are identical either way). Pass
+    appends give the O(batch) write AND compact scans. Pass
     False only when the caller immediately writes the returned frames
     out (the production path — the table write itself is the
     checkpoint).
@@ -1011,8 +1001,8 @@ def admit_batch(
     (the dominant per-round write at depth: 1.6 GB/round measured at
     the organic sf1.0 rung). Managed entirely inside admit_batch; the
     entry is dropped whenever a round leaves it unmaintainable (direct
-    route, checkpoint_store=False, or the "full" checkpoint strategy),
-    and the next collapsed round re-seeds it with one store agg.
+    route or checkpoint_store=False), and the next collapsed round
+    re-seeds it with one store agg.
     Results are identical with or without it (pinned by pytest)."""
     new_sigs, new_hashes = minhash_store(new, text_col, id_col, n_perm)
     route_collapsed = collapse_identical
@@ -1065,50 +1055,41 @@ def admit_batch(
         # (both store updates and relations read them).
         if not route_collapsed:
             relations = relations.localCheckpoint()
-        if _ADMIT_CKPT_STRATEGY() == "full":
-            # pre-r14 strategy, kept as the A/B lever (see docstring)
-            updated_sigs = store_sigs.unionByName(delta_sigs).localCheckpoint()
-            updated_hashes = store_hashes.unionByName(
-                delta_hashes
-            ).localCheckpoint()
-        else:
-            # ONE O(batch) eager write per round: the admitted delta's
-            # sig and hash rows share the doc_id key, so a single wide
-            # checkpoint replaces two store-sized ones; the returned
-            # frames are column views over (store ∪ delta) — the store
-            # legs are the caller's already-materialized state and are
-            # never rewritten.
-            delta = delta_hashes.join(delta_sigs, "doc_id").localCheckpoint()
-            sig_cols = [c for c in new_sigs.columns if c != "doc_id"]
-            updated_sigs = store_sigs.unionByName(
-                delta.select("doc_id", *sig_cols)
-            )
-            updated_hashes = store_hashes.unionByName(
-                delta.select("doc_id", "tok_hashes")
-            )
-            if class_state is not None and route_collapsed:
-                # invariant-maintained store class dictionary (see
-                # _admit_relations_collapsed): admitted docs are always
-                # singleton classes, so next round's store side is a
-                # lazy column view over this round's delta checkpoint —
-                # the per-round O(store) class agg + checkpoint never
-                # recurs once the seed round paid it
-                class_state["store_classes"] = store_cls.unionByName(
-                    delta.select(
-                        "tok_hashes",
-                        "doc_id",
-                        F.array("doc_id").alias("members"),
-                    )
+        # ONE O(batch) eager write per round: the admitted delta's
+        # sig and hash rows share the doc_id key, so a single wide
+        # checkpoint replaces two store-sized ones; the returned
+        # frames are column views over (store ∪ delta) — the store
+        # legs are the caller's already-materialized state and are
+        # never rewritten.
+        delta = delta_hashes.join(delta_sigs, "doc_id").localCheckpoint()
+        sig_cols = [c for c in new_sigs.columns if c != "doc_id"]
+        updated_sigs = store_sigs.unionByName(
+            delta.select("doc_id", *sig_cols)
+        )
+        updated_hashes = store_hashes.unionByName(
+            delta.select("doc_id", "tok_hashes")
+        )
+        if class_state is not None and route_collapsed:
+            # invariant-maintained store class dictionary (see
+            # _admit_relations_collapsed): admitted docs are always
+            # singleton classes, so next round's store side is a
+            # lazy column view over this round's delta checkpoint —
+            # the per-round O(store) class agg + checkpoint never
+            # recurs once the seed round paid it
+            class_state["store_classes"] = store_cls.unionByName(
+                delta.select(
+                    "tok_hashes",
+                    "doc_id",
+                    F.array("doc_id").alias("members"),
                 )
+            )
         new_sigs.unpersist()
         new_hashes.unpersist()
     else:
         updated_sigs = store_sigs.unionByName(delta_sigs)
         updated_hashes = store_hashes.unionByName(delta_hashes)
     if class_state is not None and "store_classes" in class_state and (
-        not route_collapsed
-        or not checkpoint_store
-        or _ADMIT_CKPT_STRATEGY() == "full"
+        not route_collapsed or not checkpoint_store
     ):
         # the maintained dictionary is only valid when this round both
         # took the collapsed route AND checkpointed its delta — anything

@@ -3,7 +3,8 @@
 The reference builds a sklearn ``NearestNeighbors`` index over the consenting
 ("build") side and probes it with every non-consenting row
 (reference: nearest_consented_customers.py:46-264). Spark has no kNN join, so
-this module provides two physical strategies with identical semantics:
+this module provides four physical routes; ``choose_impl`` picks one for
+``impl="auto"``:
 
 ``impl="sql"`` — pure DataFrame composition: broadcast cross join →
     Catalyst distance expression → ``row_number`` top-k (kNN) or theta
@@ -11,17 +12,26 @@ this module provides two physical strategies with identical semantics:
     plan Catalyst produces is BroadcastNestedLoopJoin → Window. The only
     shuffle is the hash exchange for the per-probe window.
 
-``impl="numpy"`` — the scale path: the build side's (id, features) matrix is
-    broadcast to executors once, and ``mapInPandas`` computes vectorized
-    chunked top-k per probe partition with numpy. ZERO shuffle: output is
-    probe-partitioned (probe_id, build_id, distance) pairs directly. This is
-    the strategy that survives a 100 TB probe side — per-partition cost is
-    O(rows × n_build × width) flops with no m×n row materialization, and it
+``impl="numpy"`` — the broadcast scale path: the build side's (id, features)
+    matrix is broadcast to executors once, and ``mapInPandas`` computes
+    vectorized chunked matches per probe partition with numpy. ZERO
+    shuffle: output is probe-partitioned (probe_id, build_id, distance)
+    pairs directly — or, fused with softmax + scatter-add, per-partition
+    partial aggregates (``adjust_partials_numpy``). Per-partition cost is
+    O(rows × n_build × width) flops with no m×n row materialization; it
     replaces the reference's single-node sklearn query
-    (nearest_consented_customers.py:184-221) with an embarrassingly parallel
-    scan.
+    (nearest_consented_customers.py:184-221) with an embarrassingly
+    parallel scan.
 
-Both strategies break distance ties deterministically by ``build_id``.
+``impl="grouped"`` — the dictionary kernels: the distance grid over
+    DISTINCT feature vectors only, expanded to rows at the output join —
+    flat in the row counts on low-cardinality (one-hot) spaces.
+
+``impl="lsh"`` — hyperplane-bucketed co-groups for build sides past the
+    broadcast limit; approximate, neither side collected.
+
+The three exact routes break distance ties deterministically by
+(distance, ``build_id``) and return the same matches.
 
 The matched-pairs long format ``(probe cols…, build_id, distance)`` is the
 engine's core IR — weighting, scatter-add, and all summaries are windows and
@@ -240,42 +250,29 @@ def radius_classes(
     return grid.join(brows, "__bf").select(key, build_id, DISTANCE)
 
 
-def _knn_join_grouped(
+def _join_grouped(
     probe: DataFrame,
     build: DataFrame,
-    k: int,
     *,
+    k: int | None = None,
+    radius: float | None = None,
     metric: str = "manhattan",
     build_id: str = "build_id",
     features: str = "features",
     feature_width: int | None = None,
 ) -> DataFrame:
-    """Dictionary kNN: ``knn_topk_classes`` broadcast onto probe rows."""
-    topk = knn_topk_classes(
-        probe, build, k, metric=metric, build_id=build_id,
-        features=features, feature_width=feature_width,
-    )
-    payload = probe.withColumn("__pf", F.col(features)).drop(features)
-    return payload.join(F.broadcast(topk), "__pf").drop("__pf")
-
-
-def _radius_join_grouped(
-    probe: DataFrame,
-    build: DataFrame,
-    radius: float,
-    *,
-    metric: str = "manhattan",
-    build_id: str = "build_id",
-    features: str = "features",
-    feature_width: int | None = None,
-) -> DataFrame:
-    """Dictionary radius join: ``radius_classes`` expanded onto probe
-    rows. Output-bound: every materialized row beyond the d_p·d_b grid
+    """Dictionary kNN (``knn_topk_classes``, ≤ d_p·k rows, broadcast) or
+    radius join (``radius_classes``) expanded onto probe rows. The radius
+    form is output-bound: every materialized row beyond the d_p·d_b grid
     is an output row or one of its two expansion precursors."""
-    cand = radius_classes(
-        probe, build, radius, metric=metric, build_id=build_id,
-        features=features, feature_width=feature_width,
+    kw = dict(
+        metric=metric, build_id=build_id, features=features,
+        feature_width=feature_width,
     )
+    if k is not None:
+        cand = F.broadcast(knn_topk_classes(probe, build, k, **kw))
+    else:
+        cand = radius_classes(probe, build, radius, **kw)
     payload = probe.withColumn("__pf", F.col(features)).drop(features)
     return payload.join(cand, "__pf").drop("__pf")
 
@@ -321,13 +318,13 @@ def knn_join(
     exactly k rows per probe. reference: nearest_consented_customers.py:184-221.
     """
     if impl == "numpy":
-        return _knn_join_numpy(
-            probe, build, k, metric=metric, build_id=build_id,
+        return _join_numpy(
+            probe, build, k=k, metric=metric, build_id=build_id,
             features=features, build_matrix=build_matrix,
         )
     if impl == "grouped":
-        return _knn_join_grouped(
-            probe, build, k, metric=metric, build_id=build_id,
+        return _join_grouped(
+            probe, build, k=k, metric=metric, build_id=build_id,
             features=features, feature_width=feature_width,
         )
     pairs = _pairs_with_distance(
@@ -360,13 +357,13 @@ def radius_join(
     anti-join against this output's probe ids.
     """
     if impl == "numpy":
-        return _radius_join_numpy(
-            probe, build, radius, metric=metric, build_id=build_id,
+        return _join_numpy(
+            probe, build, radius=radius, metric=metric, build_id=build_id,
             features=features, build_matrix=build_matrix,
         )
     if impl == "grouped":
-        return _radius_join_grouped(
-            probe, build, radius, metric=metric, build_id=build_id,
+        return _join_grouped(
+            probe, build, radius=radius, metric=metric, build_id=build_id,
             features=features, feature_width=feature_width,
         )
     pairs = _pairs_with_distance(
@@ -395,8 +392,8 @@ def min_distance_per_probe(
     partial/final min with no pair materialization beyond the scan.
     """
     if impl == "numpy":
-        pairs = _knn_join_numpy(
-            probe.select(probe_id, features), build, 1, metric=metric,
+        pairs = _join_numpy(
+            probe.select(probe_id, features), build, k=1, metric=metric,
             build_id=build_id, features=features, build_matrix=build_matrix,
         )
         return pairs.select(
@@ -636,8 +633,8 @@ def similarity_join(
         if impl == "numpy":
             # the numpy kernel collects the build side anyway — resolve and
             # validate k there instead of paying a separate count() job
-            return _knn_join_numpy(
-                probe, build, config.number_nearest_neighbors,
+            return _join_numpy(
+                probe, build, k=config.number_nearest_neighbors,
                 metric=config.metric, build_id=build_id, features=features,
                 build_matrix=build_matrix,
             )
@@ -1012,6 +1009,102 @@ def _lsh_coarse_groups(n_rows_hint: int | None, n_planes: int) -> int | None:
     return None if g >= (1 << n_planes) else g
 
 
+def _lsh_bucket_matches(
+    probe: DataFrame,
+    build: DataFrame,
+    feature_width: int,
+    *,
+    k: int | None,
+    radius: float | None,
+    metric: str,
+    probe_id: str,
+    build_id: str,
+    features: str,
+    n_planes: int,
+    n_tables: int,
+    n_rows_hint: int | None,
+) -> DataFrame:
+    """The LSH joins' one bucket pass: both sides signed by deterministic
+    random hyperplanes (multi-table OR-amplification, one BLAS matmul per
+    Arrow batch), co-grouped by (table, signature) — or, with a row-count
+    hint, by (table, hash(signature) mod g) — and matched per signature
+    with ``_match``: the local top-k (``k``) or every pair within
+    ``radius``. Returns (probe_id, build_id, distance) rows, one per
+    (pair, agreeing table).
+
+    Each group is converted to numpy once and sliced per signature, so a
+    per-signature group and a coarse group run identical math: the same
+    distance kernel and, for kNN, the same stable argsort whose tie-break
+    is (distance, build_id) because each signature's build rows are
+    sorted by id.
+    """
+    from .similarity_search import _signature_array
+
+    sig = _signature_array(
+        features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
+    )
+    q = probe.select(
+        F.col(probe_id).alias("__pid"),
+        F.col(features).alias("__f"),
+        F.posexplode(sig).alias("table_id", "lsh_sig"),
+    )
+    c = build.select(
+        F.col(build_id).alias("__bid"),
+        F.col(features).alias("__f"),
+        F.posexplode(sig).alias("table_id", "lsh_sig"),
+    )
+    out_schema = T.StructType(
+        [
+            T.StructField(probe_id, probe.schema[probe_id].dataType, True),
+            T.StructField(build_id, build.schema[build_id].dataType, True),
+            T.StructField(DISTANCE, T.DoubleType(), False),
+        ]
+    )
+    build_order = ["lsh_sig", "__bid"] if k is not None else ["lsh_sig"]
+
+    def bucket(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
+        if left.empty or right.empty:
+            return empty
+        left = left.sort_values("lsh_sig", kind="stable")
+        right = right.sort_values(build_order, kind="stable")
+        Q_all = np.array(left["__f"].tolist(), dtype=np.float64)
+        C_all = np.array(right["__f"].tolist(), dtype=np.float64)
+        l_sig = left["lsh_sig"].to_numpy()
+        r_sig = right["lsh_sig"].to_numpy()
+        l_pid = left["__pid"].to_numpy()
+        r_bid = right["__bid"].to_numpy()
+        outs = []
+        for s in np.intersect1d(np.unique(l_sig), np.unique(r_sig)):
+            ql, qh = np.searchsorted(l_sig, [s, s + 1])
+            cl, ch = np.searchsorted(r_sig, [s, s + 1])
+            Q, C = Q_all[ql:qh], C_all[cl:ch]
+            D = _chunk_distances(Q, C, metric, _is_binary(C) and _is_binary(Q))
+            rows, cols, dist = _match(D, k, radius)
+            outs.append(
+                pd.DataFrame(
+                    {
+                        probe_id: l_pid[ql:qh][rows],
+                        build_id: r_bid[cl:ch][cols],
+                        DISTANCE: dist,
+                    }
+                )
+            )
+        return pd.concat(outs, ignore_index=True) if outs else empty
+
+    g = _lsh_coarse_groups(n_rows_hint, n_planes)
+    key = "lsh_sig"
+    if g is not None:
+        key = "__grp"
+        grp = F.pmod(F.xxhash64("lsh_sig"), F.lit(g))
+        q, c = q.withColumn(key, grp), c.withColumn(key, grp)
+    return (
+        q.groupBy("table_id", key)
+        .cogroup(c.groupBy("table_id", key))
+        .applyInPandas(bucket, schema=out_schema)
+    )
+
+
 def knn_join_lsh(
     probe: DataFrame,
     build: DataFrame,
@@ -1057,104 +1150,11 @@ def knn_join_lsh(
     size (g grows with n until it reaches the 2^p per-signature
     granularity, which is exactly the pre-hint shape).
     """
-    from .similarity_search import _signature_array
-
-    sig = _signature_array(
-        features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
+    local = _lsh_bucket_matches(
+        probe, build, feature_width, k=k, radius=None, metric=metric,
+        probe_id=probe_id, build_id=build_id, features=features,
+        n_planes=n_planes, n_tables=n_tables, n_rows_hint=n_rows_hint,
     )
-    q = probe.select(
-        F.col(probe_id).alias("__pid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    c = build.select(
-        F.col(build_id).alias("__bid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(
-                probe_id, probe.schema[probe_id].dataType, True
-            ),
-            T.StructField(build_id, build.schema[build_id].dataType, True),
-            T.StructField(DISTANCE, T.DoubleType(), False),
-        ]
-    )
-
-    def _topk_one_bucket(Q, C, pids, bids):
-        """Per-signature top-k — identical math on either grouping: the
-        same distance kernel, the same stable argsort whose tie-break is
-        (distance, build_id) because C rows arrive sorted by build id."""
-        D = _chunk_distances(Q, C, metric, _is_binary(C) and _is_binary(Q))
-        kk = min(k, D.shape[1])
-        idx = np.argsort(D, axis=1, kind="stable")[:, :kk]
-        dist = np.take_along_axis(D, idx, axis=1)
-        return pd.DataFrame(
-            {
-                probe_id: pids.repeat(kk),
-                build_id: bids[idx].ravel(),
-                DISTANCE: dist.ravel(),
-            }
-        )
-
-    def bucket_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {probe_id: [], build_id: [], DISTANCE: []}
-            )
-        # sort candidates by id so the stable argsort tie-break is
-        # (distance, build_id), matching the exact join
-        right = right.sort_values("__bid", kind="stable")
-        Q = np.array(left["__f"].tolist(), dtype=np.float64)
-        C = np.array(right["__f"].tolist(), dtype=np.float64)
-        return _topk_one_bucket(
-            Q, C, left["__pid"].to_numpy(), right["__bid"].to_numpy()
-        )
-
-    def coarse_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
-        if left.empty or right.empty:
-            return empty
-        # ONE conversion for the whole coarse group, then per-signature
-        # slices: stable sort keeps each signature's C rows ordered by
-        # build id (the tie-break) and Q rows in their group order
-        left = left.sort_values("lsh_sig", kind="stable")
-        right = right.sort_values(["lsh_sig", "__bid"], kind="stable")
-        Q_all = np.array(left["__f"].tolist(), dtype=np.float64)
-        C_all = np.array(right["__f"].tolist(), dtype=np.float64)
-        l_sig = left["lsh_sig"].to_numpy()
-        r_sig = right["lsh_sig"].to_numpy()
-        l_pid = left["__pid"].to_numpy()
-        r_bid = right["__bid"].to_numpy()
-        outs = []
-        for s in np.intersect1d(np.unique(l_sig), np.unique(r_sig)):
-            ql, qh = np.searchsorted(l_sig, [s, s + 1])
-            cl, ch = np.searchsorted(r_sig, [s, s + 1])
-            outs.append(
-                _topk_one_bucket(
-                    Q_all[ql:qh], C_all[cl:ch], l_pid[ql:qh], r_bid[cl:ch]
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    g = _lsh_coarse_groups(n_rows_hint, n_planes)
-    if g is None:
-        local = (
-            q.groupBy("table_id", "lsh_sig")
-            .cogroup(c.groupBy("table_id", "lsh_sig"))
-            .applyInPandas(bucket_topk, schema=out_schema)
-        )
-    else:
-        grp = F.pmod(F.xxhash64("lsh_sig"), F.lit(g))
-        local = (
-            q.withColumn("__grp", grp)
-            .groupBy("table_id", "__grp")
-            .cogroup(
-                c.withColumn("__grp", grp).groupBy("table_id", "__grp")
-            )
-            .applyInPandas(coarse_topk, schema=out_schema)
-        )
     # a pair surfaces once per agreeing table with an identical distance —
     # collapse before the global top-k (narrow rows only; the feature
     # arrays never left their buckets)
@@ -1200,91 +1200,11 @@ def radius_join_lsh(
     does) rather than materialize. Recall is governed by
     n_planes/n_tables; tests assert a floor vs the exact join.
     """
-    from .similarity_search import _signature_array
-
-    sig = _signature_array(
-        features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
+    local = _lsh_bucket_matches(
+        probe, build, feature_width, k=None, radius=radius, metric=metric,
+        probe_id=probe_id, build_id=build_id, features=features,
+        n_planes=n_planes, n_tables=n_tables, n_rows_hint=n_rows_hint,
     )
-    q = probe.select(
-        F.col(probe_id).alias("__pid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    c = build.select(
-        F.col(build_id).alias("__bid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(probe_id, probe.schema[probe_id].dataType, True),
-            T.StructField(build_id, build.schema[build_id].dataType, True),
-            T.StructField(DISTANCE, T.DoubleType(), False),
-        ]
-    )
-
-    def _radius_one_bucket(Q, C, pids, bids):
-        D = _chunk_distances(Q, C, metric, _is_binary(C) and _is_binary(Q))
-        rows, cols = np.nonzero(D <= radius)
-        return pd.DataFrame(
-            {
-                probe_id: pids[rows],
-                build_id: bids[cols],
-                DISTANCE: D[rows, cols],
-            }
-        )
-
-    def bucket_radius(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
-        Q = np.array(left["__f"].tolist(), dtype=np.float64)
-        C = np.array(right["__f"].tolist(), dtype=np.float64)
-        return _radius_one_bucket(
-            Q, C, left["__pid"].to_numpy(), right["__bid"].to_numpy()
-        )
-
-    def coarse_radius(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
-        if left.empty or right.empty:
-            return empty
-        # one conversion per coarse group, per-signature slices — see
-        # knn_join_lsh's coarse_topk for the grouping rationale
-        left = left.sort_values("lsh_sig", kind="stable")
-        right = right.sort_values("lsh_sig", kind="stable")
-        Q_all = np.array(left["__f"].tolist(), dtype=np.float64)
-        C_all = np.array(right["__f"].tolist(), dtype=np.float64)
-        l_sig = left["lsh_sig"].to_numpy()
-        r_sig = right["lsh_sig"].to_numpy()
-        l_pid = left["__pid"].to_numpy()
-        r_bid = right["__bid"].to_numpy()
-        outs = []
-        for s in np.intersect1d(np.unique(l_sig), np.unique(r_sig)):
-            ql, qh = np.searchsorted(l_sig, [s, s + 1])
-            cl, ch = np.searchsorted(r_sig, [s, s + 1])
-            outs.append(
-                _radius_one_bucket(
-                    Q_all[ql:qh], C_all[cl:ch], l_pid[ql:qh], r_bid[cl:ch]
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    g = _lsh_coarse_groups(n_rows_hint, n_planes)
-    if g is None:
-        local = (
-            q.groupBy("table_id", "lsh_sig")
-            .cogroup(c.groupBy("table_id", "lsh_sig"))
-            .applyInPandas(bucket_radius, schema=out_schema)
-        )
-    else:
-        grp = F.pmod(F.xxhash64("lsh_sig"), F.lit(g))
-        local = (
-            q.withColumn("__grp", grp)
-            .groupBy("table_id", "__grp")
-            .cogroup(
-                c.withColumn("__grp", grp).groupBy("table_id", "__grp")
-            )
-            .applyInPandas(coarse_radius, schema=out_schema)
-        )
     return local.groupBy(probe_id, build_id).agg(
         F.min(DISTANCE).alias(DISTANCE)
     )
@@ -1384,123 +1304,119 @@ def _auto_chunk(n_build: int, width: int, budget_bytes: int = 128 << 20) -> int:
     return max(16, min(1024, budget_bytes // per_row))
 
 
-def _knn_join_numpy(
-    probe: DataFrame,
-    build: DataFrame,
-    k: float,
-    *,
-    metric: str,
-    build_id: str,
-    features: str,
-    chunk: int | None = None,
-    build_matrix: tuple[np.ndarray, np.ndarray] | None = None,
-) -> DataFrame:
-    """Broadcast-build vectorized kNN via mapInPandas — no shuffle.
+def _match(
+    D: np.ndarray, k: int | None, radius: float | None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one match step over a distance block: ``(rows, cols, distance)``
+    with rows ascending and each row's matches contiguous.
 
-    Build ids arrive pre-sorted so the stable argsort on (distance,
-    position) reproduces the SQL path's (distance, build_id) tie-break
-    exactly. ``k`` may be fractional (proportional-k) — resolved against
-    the collected build side, sparing the driver a count() job.
+    kNN: the (up to) k nearest per row by a stable argsort, i.e.
+    lexicographic (distance, position); the callers' build rows are sorted
+    by build_id, so ties at the k-th distance resolve to the smallest
+    build_id exactly like the SQL path's row_number ORDER BY (distance,
+    build_id). (An argpartition pre-pass would be faster for huge n but
+    picks arbitrary candidates among boundary ties — wrong.) Radius:
+    ``nonzero(D <= radius)``.
     """
-    spark = probe.sparkSession
-    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
-    k = resolve_k(k, len(ids))
-    bc = spark.sparkContext.broadcast((ids, mat))
-    pass_cols = [c for c in probe.columns if c != features]
-    id_dtype = (
-        T.LongType()
-        if np.issubdtype(ids.dtype, np.integer)
-        else T.StringType()
-    )
-    out_schema = T.StructType(
-        [probe.schema[c] for c in pass_cols]
-        + [
-            T.StructField(build_id, id_dtype, False),
-            T.StructField(DISTANCE, T.DoubleType(), False),
-        ]
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_ids, B = bc.value
-        n = B.shape[0]
-        kk = min(k, n)
-        binary = metric == "manhattan" and _is_binary(B)
-        step = chunk or _auto_chunk(n, B.shape[1])
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.array(pdf[features].tolist(), dtype=np.float64)
-            if binary and not _is_binary(X):
-                binary = False
-            for lo in range(0, len(pdf), step):
-                hi = min(lo + step, len(pdf))
-                D = _chunk_distances(X[lo:hi], B, metric, binary)
-                # stable argsort = lexicographic (distance, position); B rows
-                # are pre-sorted by build_id, so ties at the k-th distance
-                # resolve to the smallest build_id exactly like the SQL
-                # path's row_number ORDER BY (distance, build_id). (An
-                # argpartition pre-pass would be faster for huge n but picks
-                # arbitrary candidates among boundary ties — wrong.)
-                idx_final = np.argsort(D, axis=1, kind="stable")[:, :kk]
-                dist_final = np.take_along_axis(D, idx_final, axis=1)
-                rep = pdf.iloc[lo:hi][pass_cols].loc[
-                    pdf.index[lo:hi].repeat(kk)
-                ].reset_index(drop=True)
-                rep[build_id] = b_ids[idx_final].ravel()
-                rep[DISTANCE] = dist_final.ravel()
-                yield rep
-
-    return probe.mapInPandas(compute, schema=out_schema)
+    if k is not None:
+        idx = np.argsort(D, axis=1, kind="stable")[:, :k]
+        rows = np.repeat(np.arange(D.shape[0]), idx.shape[1])
+        return rows, idx.ravel(), np.take_along_axis(D, idx, axis=1).ravel()
+    rows, cols = np.nonzero(D <= radius)
+    return rows, cols, D[rows, cols]
 
 
-def _radius_join_numpy(
+def _broadcast_build(
     probe: DataFrame,
     build: DataFrame,
-    radius: float,
+    build_id: str,
+    features: str,
+    build_matrix: tuple[np.ndarray, np.ndarray] | None,
+):
+    """The numpy kernels' shared setup: the id-sorted build matrix
+    (collected unless the caller supplies it) broadcast once, its row
+    count, and the Spark type of its ids."""
+    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
+    bc = probe.sparkSession.sparkContext.broadcast((ids, mat))
+    id_type = (
+        T.LongType() if np.issubdtype(ids.dtype, np.integer) else T.StringType()
+    )
+    return bc, len(ids), id_type
+
+
+def _chunk_matches(
+    batches: Iterator[pd.DataFrame],
+    B: np.ndarray,
     *,
+    k: int | None,
+    radius: float | None,
+    metric: str,
+    features: str,
+    chunk: int | None,
+) -> Iterator[tuple[pd.DataFrame, np.ndarray, np.ndarray, np.ndarray]]:
+    """The numpy kernels' one chunk loop: per probe chunk of each Arrow
+    batch, yields ``(chunk_pdf, rows, cols, distance)`` from ``_match`` —
+    chunk-local probe rows, build positions (B is id-sorted) and
+    distances. Chunks without a match are skipped."""
+    n = B.shape[0]
+    binary = metric == "manhattan" and _is_binary(B)
+    step = chunk or _auto_chunk(n, B.shape[1] if n else 1)
+    for pdf in batches:
+        if pdf.empty or n == 0:
+            continue
+        X = np.array(pdf[features].tolist(), dtype=np.float64)
+        if binary and not _is_binary(X):
+            binary = False
+        for lo in range(0, len(pdf), step):
+            hi = min(lo + step, len(pdf))
+            D = _chunk_distances(X[lo:hi], B, metric, binary)
+            rows, cols, dist = _match(D, k, radius)
+            if len(rows):
+                yield pdf.iloc[lo:hi], rows, cols, dist
+
+
+def _join_numpy(
+    probe: DataFrame,
+    build: DataFrame,
+    *,
+    k: float | None = None,
+    radius: float | None = None,
     metric: str,
     build_id: str,
     features: str,
     chunk: int | None = None,
     build_matrix: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
-    spark = probe.sparkSession
-    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
-    bc = spark.sparkContext.broadcast((ids, mat))
-    pass_cols = [c for c in probe.columns if c != features]
-    id_dtype = (
-        T.LongType()
-        if np.issubdtype(ids.dtype, np.integer)
-        else T.StringType()
+    """Broadcast-build vectorized kNN (``k``) or radius join via
+    mapInPandas — no shuffle. Output: every probe column but the features,
+    plus (build_id, distance). ``k`` may be fractional (proportional-k) —
+    resolved against the collected build side, sparing the driver a
+    count() job.
+    """
+    bc, n_build, id_type = _broadcast_build(
+        probe, build, build_id, features, build_matrix
     )
+    if k is not None:
+        k = resolve_k(k, n_build)
+    pass_cols = [c for c in probe.columns if c != features]
     out_schema = T.StructType(
         [probe.schema[c] for c in pass_cols]
         + [
-            T.StructField(build_id, id_dtype, False),
+            T.StructField(build_id, id_type, False),
             T.StructField(DISTANCE, T.DoubleType(), False),
         ]
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         b_ids, B = bc.value
-        binary = metric == "manhattan" and _is_binary(B)
-        step = chunk or _auto_chunk(B.shape[0], B.shape[1])
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.array(pdf[features].tolist(), dtype=np.float64)
-            if binary and not _is_binary(X):
-                binary = False
-            for lo in range(0, len(pdf), step):
-                hi = min(lo + step, len(pdf))
-                D = _chunk_distances(X[lo:hi], B, metric, binary)
-                rows, cols = np.nonzero(D <= radius)
-                if len(rows) == 0:
-                    continue
-                rep = pdf.iloc[lo:hi][pass_cols].iloc[rows].reset_index(drop=True)
-                rep[build_id] = b_ids[cols]
-                rep[DISTANCE] = D[rows, cols]
-                yield rep
+        for part, rows, cols, dist in _chunk_matches(
+            batches, B, k=k, radius=radius, metric=metric,
+            features=features, chunk=chunk,
+        ):
+            rep = part[pass_cols].iloc[rows].reset_index(drop=True)
+            rep[build_id] = b_ids[cols]
+            rep[DISTANCE] = dist
+            yield rep
 
     return probe.mapInPandas(compute, schema=out_schema)
 
@@ -1526,7 +1442,8 @@ def adjust_partials_numpy(
     Every probe's match set is chunk-local, so its softmax weights
     (max-shifted exactly like scipy.special.softmax,
     reference: nearest_consented_customers.py:404-406) are computable
-    in-kernel; the scatter-add becomes a ``np.bincount`` over build
+    in-kernel, segment-wise over the match rows — a kNN chunk is just k
+    matches per row; the scatter-add becomes a ``np.bincount`` over build
     positions, accumulated across the whole partition. Output is at most
     ``n_build + 1`` rows per partition regardless of how many pairs matched
     — the distributed equivalent of a map-side combine, which is what makes
@@ -1539,18 +1456,13 @@ def adjust_partials_numpy(
     """
     if (k is None) == (radius is None):
         raise ValueError("exactly one of k / radius required")
-    spark = probe.sparkSession
-    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
-    kk = resolve_k(k, len(ids)) if k is not None else None
-    bc = spark.sparkContext.broadcast((ids, mat))
-    id_dtype = (
-        T.LongType()
-        if np.issubdtype(ids.dtype, np.integer)
-        else T.StringType()
+    bc, n_build, id_type = _broadcast_build(
+        probe, build, build_id, features, build_matrix
     )
+    kk = resolve_k(k, n_build) if k is not None else None
     out_schema = T.StructType(
         [
-            T.StructField(build_id, id_dtype, True),
+            T.StructField(build_id, id_type, True),
             T.StructField("adjusted_partial", T.DoubleType(), False),
             T.StructField("sum_distance_partial", T.DoubleType(), False),
             T.StructField("n_partial", T.LongType(), False),
@@ -1568,60 +1480,24 @@ def adjust_partials_numpy(
         acc_cnt = np.zeros(n, dtype=np.int64)
         acc_w = np.zeros(n)
         tmv = 0.0
-        binary = metric == "manhattan" and _is_binary(B)
-        step = chunk or _auto_chunk(n, B.shape[1] if n else 1)
-        for pdf in batches:
-            if pdf.empty or n == 0:
-                continue
-            X = np.array(pdf[features].tolist(), dtype=np.float64)
-            conv = pdf[conversion_column].to_numpy(dtype=np.float64)
-            if binary and not _is_binary(X):
-                binary = False
-            for lo in range(0, len(pdf), step):
-                hi = min(lo + step, len(pdf))
-                D = _chunk_distances(X[lo:hi], B, metric, binary)
-                cv = conv[lo:hi]
-                if kk is not None:
-                    if kk == 0:
-                        continue
-                    # same stable (distance, position) tie-break as
-                    # _knn_join_numpy — b_ids pre-sorted by _collect
-                    idx = np.argsort(D, axis=1, kind="stable")[:, :kk]
-                    dist = np.take_along_axis(D, idx, axis=1)
-                    shift = dist[:, :1]  # min distance ⇒ max of −d
-                    e = np.exp(shift - dist)
-                    w = e / e.sum(axis=1, keepdims=True)
-                    flat = idx.ravel()
-                    acc_adj += np.bincount(
-                        flat, weights=(w * cv[:, None]).ravel(), minlength=n
-                    )
-                    acc_dist += np.bincount(
-                        flat, weights=dist.ravel(), minlength=n
-                    )
-                    acc_cnt += np.bincount(flat, minlength=n)
-                    acc_w += np.bincount(flat, weights=w.ravel(), minlength=n)
-                    tmv += cv.sum()
-                else:
-                    rows, cols = np.nonzero(D <= radius)
-                    if len(rows) == 0:
-                        continue
-                    d = D[rows, cols]
-                    counts = np.bincount(rows, minlength=hi - lo)
-                    nz = counts > 0
-                    cnz = counts[nz]
-                    starts = np.concatenate(([0], np.cumsum(cnz)[:-1]))
-                    rmin = np.minimum.reduceat(d, starts)
-                    e = np.exp(np.repeat(rmin, cnz) - d)
-                    denom = np.add.reduceat(e, starts)
-                    w = e / np.repeat(denom, cnz)
-                    convs = cv[rows]
-                    acc_adj += np.bincount(
-                        cols, weights=w * convs, minlength=n
-                    )
-                    acc_dist += np.bincount(cols, weights=d, minlength=n)
-                    acc_cnt += np.bincount(cols, minlength=n)
-                    acc_w += np.bincount(cols, weights=w, minlength=n)
-                    tmv += cv[nz].sum()
+        for part, rows, cols, d in _chunk_matches(
+            batches, B, k=kk, radius=radius, metric=metric,
+            features=features, chunk=chunk,
+        ):
+            cv = part[conversion_column].to_numpy(dtype=np.float64)
+            counts = np.bincount(rows, minlength=len(cv))
+            nz = counts > 0
+            cnz = counts[nz]
+            # shift by each row's min distance (= max of −d); the bincount
+            # denominator sums each row's terms in match order
+            rmin = np.minimum.reduceat(d, np.cumsum(cnz) - cnz)
+            e = np.exp(np.repeat(rmin, cnz) - d)
+            w = e / np.bincount(rows, weights=e, minlength=len(cv))[rows]
+            acc_adj += np.bincount(cols, weights=w * cv[rows], minlength=n)
+            acc_dist += np.bincount(cols, weights=d, minlength=n)
+            acc_cnt += np.bincount(cols, minlength=n)
+            acc_w += np.bincount(cols, weights=w, minlength=n)
+            tmv += cv[nz].sum()
         mask = acc_cnt > 0
         m = int(mask.sum())
         # nullable id dtype: the sentinel row's null must not coerce an

@@ -62,20 +62,3 @@ def distance_statistics(
     return data_adjusted.select(col).summary(
         "count", "mean", "stddev", "min", "25%", "50%", "75%", "max"
     )
-
-
-def nearest_distance_percentiles(
-    nearest: DataFrame,
-    col: str = "distance_to_nearest_neighbor",
-    percentiles: tuple = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99),
-) -> DataFrame:
-    """Exact percentiles of nearest-neighbor distances (A5/A6)."""
-    arr = ", ".join(str(p) for p in percentiles)
-    return nearest.select(
-        F.expr(f"percentile({col}, array({arr}))").alias("percentiles")
-    ).select(
-        *[
-            F.col("percentiles").getItem(i).alias(f"p{int(p * 100)}")
-            for i, p in enumerate(percentiles)
-        ]
-    )

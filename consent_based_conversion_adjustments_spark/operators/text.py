@@ -85,10 +85,6 @@ def stopword_hits_in(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.lower(t).isin(*words)))
 
 
-def stopword_hits(col: Column | str, lang: str) -> Column:
-    return stopword_hits_in(tokens(col), lang)
-
-
 def stopword_ratio_in(toks: Column, lang: str = "en") -> Column:
     n = F.size(toks)
     return F.when(n > 0, stopword_hits_in(toks, lang) / n).otherwise(0.0)
@@ -179,31 +175,6 @@ def string_hash(col: Column | str, mod: int = HASH_MOD, base: int = HASH_BASE) -
     )
 
 
-def kgram_hashes(col: Column | str, k: int = 8) -> Column:
-    """Array of polynomial hashes of every k-character gram (the rolling-
-    hash family used by winnowing fingerprinters). The string is
-    let-bound so an expression argument is evaluated once, not per gram."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    def body(s: Column) -> Column:
-        starts = F.sequence(
-            F.lit(1), F.greatest(F.length(s) - (k - 1), F.lit(1))
-        )
-        return F.transform(
-            starts,
-            lambda i: F.aggregate(
-                F.transform(
-                    F.split(F.substr(s, i, F.lit(k)), ""),
-                    lambda ch: F.ascii(ch).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: (acc * HASH_BASE + x) % HASH_MOD,
-            ),
-        )
-
-    return let(c, body)
-
-
 def shingle_hashes_in(toks: Column, n: int = 3) -> Column:
     """Array of polynomial hashes of every n-word shingle of a PRECOMPUTED
     token array (O(tokens·shingle_chars) work). ``toks`` is let-bound —
@@ -260,12 +231,6 @@ def winnow_shingle_fingerprints(
     ``window`` of consecutive shingle hashes (Schleimer et al. SIGMOD'03,
     word-level)."""
     return _winnow(shingle_hashes(col, n), window)
-
-
-def winnow_fingerprints(col: Column | str, k: int = 8, window: int = 4) -> Column:
-    """Winnowing document fingerprint: distinct minima of each ``window``
-    of consecutive k-gram hashes (Schleimer et al., SIGMOD'03 scheme)."""
-    return _winnow(kgram_hashes(col, k), window)
 
 
 def word_bigrams_in(toks: Column) -> Column:

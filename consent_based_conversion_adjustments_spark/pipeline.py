@@ -23,7 +23,7 @@ from __future__ import annotations
 import dataclasses
 import datetime
 import logging
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +64,14 @@ class AdjustmentResult:
     #: warning (nearest_consented_customers.py:178-179). Lazy anti-join;
     #: count it to surface the diagnostic.
     unmatched_probes: DataFrame | None = None
+    #: every frame ``run_adjustment`` persisted for this result
+    _persisted: list[DataFrame] = field(default_factory=list, repr=False)
+
+    def release(self) -> None:
+        """Unpersist everything this result persisted. The lazy frames stay
+        usable; consuming one afterwards recomputes it."""
+        for df in self._persisted:
+            df.unpersist()
 
 
 def _row_id(df: DataFrame, id_columns: list[str], name: str) -> DataFrame:
@@ -209,6 +217,7 @@ def run_adjustment(
     # the pairs feed three consumers (scatter-add aggs, naive-baseline
     # scalar, summary) — persist so the join runs once; m·k rows, spillable
     pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted = [pairs]
     consent_keyed = build.drop("features")
     cls_pairs = None
     pc_ids = None
@@ -259,6 +268,7 @@ def run_adjustment(
                 feature_width=encoder.width, class_ids=pc_ids,
             )
         cls_pairs = cls_pairs.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted += [pc_ids, cls_pairs]
         data_adjusted = distribute_from_class_pairs(
             consent_keyed,
             cls_pairs,
@@ -283,6 +293,7 @@ def run_adjustment(
             conversion_column=cfg.conversion_column,
             build_matrix=build_matrix,
         ).persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(partials)
         data_adjusted = distribute_from_partials(
             consent_keyed,
             partials,
@@ -327,6 +338,7 @@ def run_adjustment(
         summary=summary,
         matched_pairs=pairs,
         unmatched_probes=unmatched,
+        _persisted=persisted,
     )
 
 
@@ -388,6 +400,34 @@ def _per_date_auto_stats(
     return out
 
 
+def _adjust_dates(
+    consent: DataFrame,
+    noconsent: DataFrame,
+    config: AdjustmentConfig,
+    dates: list[str],
+    impl: str,
+):
+    """The O1-O2 date loop every ``run_dates*`` entry point shares: yields
+    ``(date, AdjustmentResult)``, one independent distributed adjustment per
+    date (dates are independent model fits — the encoder and matches must
+    not mix days), with the date filters pushed down to the scans
+    (reference: pipeline.py:318-360). The caller owns each result's
+    ``release()``."""
+    if config.date_column is None:
+        raise ValueError("the per-date loop requires config.date_column")
+    stats = (
+        _per_date_auto_stats(consent, noconsent, config)
+        if impl == "auto"
+        else {}
+    )
+    for date in dates:
+        end = _next_day(date)
+        c = scan_between_dates(consent, config.date_column, date, end)
+        nc = scan_between_dates(noconsent, config.date_column, date, end)
+        yield date, run_adjustment(c, nc, config, impl=impl,
+                                   auto_stats=stats.get(date))
+
+
 def run_dates(
     spark: SparkSession,
     consent: DataFrame,
@@ -398,21 +438,9 @@ def run_dates(
     *,
     impl: str = "auto",
 ) -> None:
-    """O1-O3 driver loop: one distributed job per date, date filters pushed
-    down to the scans (reference: pipeline.py:318-360)."""
-    if config.date_column is None:
-        raise ValueError("run_dates requires config.date_column")
-    stats = (
-        _per_date_auto_stats(consent, noconsent, config)
-        if impl == "auto"
-        else {}
-    )
-    for date in dates:
-        end = _next_day(date)
-        c = scan_between_dates(consent, config.date_column, date, end)
-        nc = scan_between_dates(noconsent, config.date_column, date, end)
-        result = run_adjustment(c, nc, config, impl=impl,
-                                auto_stats=stats.get(date))
+    """O1-O3 driver loop: one distributed job per date, each date's CSVs
+    written before the next date starts and its cached frames released."""
+    for date, result in _adjust_dates(consent, noconsent, config, dates, impl):
         write_adjustments_csv(
             result.data_adjusted, result.summary, output_path, date
         )
@@ -429,7 +457,7 @@ def run_dates(
                     date,
                     n_unmatched,
                 )
-        result.matched_pairs.unpersist()
+        result.release()
 
 
 def _next_day(date: str) -> str:
@@ -464,6 +492,23 @@ def prepare_pipeline_input(
     return dates
 
 
+def _dated_union(
+    consent: DataFrame,
+    noconsent: DataFrame,
+    config: AdjustmentConfig,
+    dates: list[str],
+    impl: str,
+) -> tuple[DataFrame, list[AdjustmentResult]]:
+    """``run_dates_collected``'s frame plus the per-date results that own
+    its cached intermediates (release them once the frame is written)."""
+    out, results = None, []
+    for date, result in _adjust_dates(consent, noconsent, config, dates, impl):
+        dated = result.data_adjusted.withColumn("date", F.lit(date))
+        out = dated if out is None else out.unionByName(dated)
+        results.append(result)
+    return out, results
+
+
 def run_dates_collected(
     consent: DataFrame,
     noconsent: DataFrame,
@@ -473,27 +518,12 @@ def run_dates_collected(
     impl: str = "auto",
 ) -> DataFrame:
     """The O1-O2 date loop without a sink: one independent distributed
-    adjustment per date (dates are independent model fits — the encoder and
-    matches must not mix days), unioned with a ``date`` literal column.
+    adjustment per date, unioned with a ``date`` literal column.
     This is the frame ``run_dates_partitioned`` writes; returning it lazily
-    lets callers pick their own sink or feed it to further queries."""
-    if config.date_column is None:
-        raise ValueError("run_dates_collected requires config.date_column")
-    stats = (
-        _per_date_auto_stats(consent, noconsent, config)
-        if impl == "auto"
-        else {}
-    )
-    out = None
-    for date in dates:
-        end = _next_day(date)
-        c = scan_between_dates(consent, config.date_column, date, end)
-        nc = scan_between_dates(noconsent, config.date_column, date, end)
-        result = run_adjustment(c, nc, config, impl=impl,
-                                auto_stats=stats.get(date))
-        dated = result.data_adjusted.withColumn("date", F.lit(date))
-        out = dated if out is None else out.unionByName(dated)
-    return out
+    lets callers pick their own sink or feed it to further queries. The
+    per-date intermediates it reads stay cached until the caller clears the
+    cache (``spark.catalog.clearCache()``)."""
+    return _dated_union(consent, noconsent, config, dates, impl)[0]
 
 
 def _write_dates_batch(out: DataFrame, output_path: str) -> None:
@@ -564,8 +594,10 @@ def run_dates_streaming(
         )
         if not dates:
             return
-        out = run_dates_collected(consent, noconsent, config, dates, impl=impl)
+        out, results = _dated_union(consent, noconsent, config, dates, impl)
         _write_dates_batch(out, output_path)
+        for result in results:
+            result.release()
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -588,7 +620,9 @@ def run_dates_partitioned(
     """Scale variant of the O3 sink: results of the per-date loop accumulate
     into a single ``partitionBy(date)`` dataset so downstream consumers get
     partition pruning instead of a directory-per-date convention."""
-    out = run_dates_collected(consent, noconsent, config, dates, impl=impl)
+    out, results = _dated_union(consent, noconsent, config, dates, impl)
     out.write.mode("overwrite").partitionBy("date").option(
         "header", True
     ).csv(f"{output_path}/adjustments_data_partitioned")
+    for result in results:
+        result.release()

@@ -31,31 +31,6 @@ from .events import stream_events_from_parquet
 from ..session import scratch_dir
 
 
-def time_bounded_stream_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    key_col: str,
-    click_ts: str = "click_ts",
-    purchase_ts: str = "purchase_ts",
-    max_delay_seconds: int = 3600,
-) -> DataFrame:
-    """Inner stream-stream join: purchase pairs with every click of the
-    same key with ``click_ts <= purchase_ts <= click_ts + max_delay``
-    (both bounds inclusive). Both inputs must be watermarked streaming
-    DataFrames; the range condition lets the engine expire click state
-    once the watermark passes ``click_ts + max_delay`` and purchase
-    state once it passes ``purchase_ts``."""
-    return purchases.join(
-        clicks,
-        (purchases[key_col] == clicks[key_col])
-        & (F.col(purchase_ts) >= F.col(click_ts))
-        & (
-            F.col(purchase_ts)
-            <= F.col(click_ts) + F.expr(f"interval {max_delay_seconds} seconds")
-        ),
-    ).drop(purchases[key_col])
-
-
 def click_purchase_pairs_streaming(
     spark: SparkSession,
     sf_dir: str,

@@ -209,6 +209,7 @@ def test_duplicate_id_check(spark, tiled_fixture):
     "mode",
     [
         {"number_nearest_neighbors": 3},
+        {"number_nearest_neighbors": 12},
         {"radius": 2.0},
         {"percentile": 0.9},
     ],

@@ -86,6 +86,47 @@ def test_run_dates_writes_per_date_csvs(spark, tmp_path):
         assert "percentage_matched_conversion_value" in summary
 
 
+@pytest.mark.parametrize("impl", ["numpy", "grouped"])
+@pytest.mark.parametrize(
+    "mode", [{"number_nearest_neighbors": 1}, {"radius": 1.0}]
+)
+def test_run_dates_releases_every_persisted_frame(spark, tmp_path, impl, mode):
+    """Each date's AdjustmentResult owns what run_adjustment persisted
+    (pairs, plus partials on numpy or the class frames on grouped);
+    run_dates releases it after the date's write, so a multi-date run
+    leaves no cached RDD behind."""
+    rows = []
+    for d, day in [("2021-11-20", 1), ("2021-11-21", 2)]:
+        for i in range(6):
+            rows.append(
+                (f"g{day}{i}", d, 10.0 * (i + 1),
+                 ["dress", "shoe", "hat"][i % 3], i % 2 == 0)
+            )
+    df = spark.createDataFrame(
+        rows, ["gclid", "conversion_date", "conversion_value", "item", "consented"]
+    )
+    cfg = AdjustmentConfig(
+        conversion_column="conversion_value",
+        id_columns=["gclid"],
+        date_column="conversion_date",
+        **mode,
+    )
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    for rdd in list(sc._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    run_dates(
+        spark,
+        df.filter("consented").drop("consented"),
+        df.filter("not consented").drop("consented"),
+        cfg,
+        ["2021-11-20", "2021-11-21"],
+        str(tmp_path / "out"),
+        impl=impl,
+    )
+    assert sc._jsc.getPersistentRDDs().size() == 0
+
+
 def test_per_date_auto_stats_matches_in_loop_counts(spark):
     """r13 (VERDICT r12 §Next #7): the one-pass per-date precount must
     agree exactly with what the in-loop auto resolution would count —
