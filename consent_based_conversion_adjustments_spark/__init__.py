@@ -11,7 +11,7 @@ Layout
 ------
 - ``config``      — engine configuration mirroring pipeline.py:44-140's surface
 - ``session``     — SparkSession builder tuned for local[32] and cluster use
-- ``sources``     — scans and sinks (S1-S5 in SURVEY.md §2.1), bucketing
+- ``sources``     — scans and sinks (S1-S5 in SURVEY.md §2.1), compaction
 - ``functions``   — distance / rounding scalar-expression builders
 - ``operators``   — preprocess, similarity join, adjust, summary, dedup,
                     similarity search, text analysis, multimodal, skew

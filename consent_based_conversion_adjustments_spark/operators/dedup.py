@@ -18,8 +18,6 @@ every stage has an exact DuckDB oracle twin.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -1356,7 +1354,8 @@ def minhash_neardup(
     back to member pairs afterwards (output-bound). Byte-identical
     output; turns the banding join's Σ_class s² cost into Σ_class s, the
     difference between a crawl with 10% boilerplate grinding the band
-    shuffle and not noticing it (measured: tools/scale/hot_band_ab_r9).
+    shuffle and not noticing it (measured: tools/scale/results_hotband_r9.json;
+    the A/B script is in commit 877f3e6).
 
     ``collapse_identical="auto"`` (the DEFAULT since round 12 — the
     choose_impl precedent applied to dedup): tokenize once, then ONE
@@ -2373,8 +2372,7 @@ def neardup_components(
 #: original edge set never touches the driver). 500k half edges is ~16 MB
 #: through Arrow and resolves in well under a second, the same budget
 #: class as a broadcast-join side; past it the distributed jump loop runs.
-#: Env-tunable for clusters where the driver is smaller or larger.
-CC_LOCAL_EDGE_BUDGET = int(os.environ.get("COCOA_CC_LOCAL_EDGES", "500000"))
+CC_LOCAL_EDGE_BUDGET = 500_000
 
 
 def _cc_union_find_local(spark, pdf) -> DataFrame:

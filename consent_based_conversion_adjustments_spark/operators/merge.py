@@ -11,8 +11,8 @@ no-op, matching MERGE (you cannot delete what is not there).
 Scale shape: exactly one shuffle — the equi-join on the merge key. The
 source side is typically a small CDC batch, so AQE broadcast-promotes
 it and the target is never shuffled; for repeated merges into a large
-bucketed target (sources/bucketing.py layout) the join is co-located
-and shuffle-free. Nothing here is row-at-a-time: the conditional
+target bucketed on the merge key (``DataFrameWriter.bucketBy``) the join
+is co-located and shuffle-free. Nothing here is row-at-a-time: the conditional
 projection is pure Catalyst.
 
 reference: the reference engine has no upsert; this extends the

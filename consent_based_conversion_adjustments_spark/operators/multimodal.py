@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Image/audio/video payloads are carried as ``binary`` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run as
+metadata struct; decode / feature-extract / frame-sample run as
 Arrow-batched Pandas UDFs over ``mapInPandas``. Codec resolution is layered:
 
 - ``fake=True`` → a deterministic stand-in (dimensions/features derived
@@ -100,30 +100,6 @@ def decode_image(payload: bytes, fake: bool = False) -> tuple[int, int, list[flo
         return width, height, feature
     raise NotImplementedError(
         "image decoding requires a codec library (e.g. Pillow); "
-        "re-run with fake=True for the deterministic stand-in"
-    )
-
-
-def resize_image(
-    payload: bytes, width: int, height: int, fake: bool = False
-) -> bytes:
-    """Resize an image payload to (width, height).
-
-    ``fake=True`` re-encodes the payload hash tagged with the target
-    dimensions (bytes in → bytes out plumbing stays real); otherwise
-    Pillow resizes and re-encodes as PNG when importable."""
-    if fake:
-        digest = hashlib.sha256(payload).digest()
-        return (
-            b"RESZ" + width.to_bytes(2, "big") + height.to_bytes(2, "big") + digest
-        )
-    if _HAS_PIL:
-        img = _PILImage.open(io.BytesIO(payload)).resize((width, height))
-        buf = io.BytesIO()
-        img.save(buf, format="PNG")
-        return buf.getvalue()
-    raise NotImplementedError(
-        "image resizing requires a codec library (e.g. Pillow); "
         "re-run with fake=True for the deterministic stand-in"
     )
 
@@ -348,14 +324,6 @@ def extract_audio_features(media: DataFrame, fake_decode: bool = True) -> DataFr
     return media.mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("n_bytes", T.IntegerType(), True),
-    ]
-)
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -367,28 +335,6 @@ FRAME_SCHEMA = T.StructType(
 
 def _payload_bytes(s: pd.Series) -> list[bytes]:
     return [bytes(p) if p is not None else b"" for p in s.tolist()]
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, fake_decode: bool = True
-) -> DataFrame:
-    """mapInPandas resize over binary payloads (stateless map, no shuffle)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = [
-                resize_image(p, width, height, fake=fake_decode)
-                for p in _payload_bytes(pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "payload": outs,
-                    "n_bytes": [len(o) for o in outs],
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def sample_video_frames(

@@ -14,8 +14,9 @@ distinct value sets (one small ``collect`` over an agg that Catalyst
 executes as a partial/final ``collect_set``). The value sets are then baked
 into the expression tree as literals, so ``transform`` is a pure map — no
 shuffle, fully codegen'd, and safe on a 100 TB input. Cardinality guardrail:
-``max_categories`` caps the literal explosion; beyond it, switch to the
-hashed-feature path (operators.similarity_join handles arbitrary widths).
+``max_categories`` caps the literal explosion; a column past it must be
+listed in ``config.drop_columns`` or bucketed by the ``feature_engineering``
+hook.
 """
 
 from __future__ import annotations
@@ -114,61 +115,14 @@ def fit_encoder(
             if len(values) > max_categories:
                 raise ValueError(
                     f"column {c!r} has {len(values)} distinct values; "
-                    f"exceeds max_categories={max_categories} — use the "
-                    "hashed-feature path instead"
+                    f"exceeds max_categories={max_categories} — list it in "
+                    "config.drop_columns or bucket it in the "
+                    "feature_engineering hook"
                 )
             categories[c] = values
     return FeatureEncoder(
         categories=categories, numeric_cols=tuple(sorted(numeric_cols))
     )
-
-
-@dataclass(frozen=True)
-class HashedFeatureEncoder:
-    """Feature hashing for high-cardinality categoricals (the fallback when
-    a column blows past ``max_categories``): each (column, value) pair
-    increments bucket ``hash(col || '=' || value) mod n_features``. No fit
-    pass at all — fully stateless, identical on both table sides by
-    construction, the standard trick when the distinct-value set itself is
-    too large to broadcast. Collisions fold dimensions together (slightly
-    blurring distances) but never break side-alignment."""
-
-    categorical_cols: tuple
-    numeric_cols: tuple
-    n_features: int = 64
-
-    @property
-    def width(self) -> int:
-        return len(self.numeric_cols) + self.n_features
-
-    def transform(self, df: DataFrame, output_col: str = "features") -> DataFrame:
-        # NULL categoricals contribute to no bucket (all-zeros), matching
-        # FeatureEncoder's one-hot null semantics — without the guard,
-        # concat_ws would skip the null and hash the bare column name into
-        # a phantom category, so the two encoder paths would disagree on
-        # distances for rows with missing values
-        buckets = [
-            (
-                F.col(c).isNotNull(),
-                F.pmod(
-                    F.xxhash64(
-                        F.concat_ws("=", F.lit(c), F.col(c).cast("string"))
-                    ),
-                    F.lit(self.n_features),
-                ),
-            )
-            for c in self.categorical_cols
-        ]
-        exprs: list[Column] = [
-            F.col(c).cast("double") for c in sorted(self.numeric_cols)
-        ]
-        for j in range(self.n_features):
-            total = None
-            for not_null, bucket in buckets:
-                term = F.when(not_null & (bucket == j), 1.0).otherwise(0.0)
-                total = term if total is None else total + term
-            exprs.append(total if total is not None else F.lit(0.0))
-        return df.withColumn(output_col, F.array(*exprs))
 
 
 def infer_feature_columns(
@@ -237,55 +191,6 @@ def union_encode_split(
     consent_out = encoded.filter(F.col(CONSENT_FLAG) == 1).drop(CONSENT_FLAG)
     noconsent_out = encoded.filter(F.col(CONSENT_FLAG) == 0).drop(CONSENT_FLAG)
     return consent_out, noconsent_out, encoder
-
-
-def fit_ml_encoder(
-    df: DataFrame, categorical_cols: list[str], numeric_cols: list[str]
-):
-    """SURVEY.md §2.4 E1 option (b): the pyspark.ml encoding path —
-    StringIndexer → OneHotEncoder → VectorAssembler producing a
-    ``SparseVector`` features column. Better than the relational encoder at
-    very high cardinality (sparse storage, no literal explosion); fit it
-    over the union exactly like ``fit_encoder`` so both sides share
-    dimensions. Returns a fitted PipelineModel whose ``transform`` adds
-    ``ml_features``.
-
-    ``dropLast=False`` keeps one indicator per distinct value — the same
-    dimensions as pd.get_dummies / FeatureEncoder, so L1/L2 distances agree
-    between the two paths (up to feature order, which distances ignore).
-    """
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
-
-    stages = []
-    vec_inputs = [f"{c}" for c in sorted(numeric_cols)]
-    if categorical_cols:
-        idx_cols = [f"__idx_{c}" for c in categorical_cols]
-        ohe_cols = [f"__ohe_{c}" for c in categorical_cols]
-        stages.append(
-            StringIndexer(
-                inputCols=list(categorical_cols),
-                outputCols=idx_cols,
-                stringOrderType="alphabetAsc",
-                handleInvalid="keep",
-            )
-        )
-        stages.append(
-            OneHotEncoder(inputCols=idx_cols, outputCols=ohe_cols, dropLast=False)
-        )
-        vec_inputs = vec_inputs + ohe_cols
-    stages.append(
-        VectorAssembler(inputCols=vec_inputs, outputCol="ml_features")
-    )
-    return Pipeline(stages=stages).fit(df)
-
-
-def ml_features_to_array(df: DataFrame, output_col: str = "features") -> DataFrame:
-    """Bridge the SparseVector column into the engine's ``array<double>``
-    feature layout so the same distance expressions / kernels apply."""
-    from pyspark.ml.functions import vector_to_array
-
-    return df.withColumn(output_col, vector_to_array(F.col("ml_features")))
 
 
 def split_adgroup_levels(

@@ -706,9 +706,9 @@ def auto_n_planes(
 
 
 #: Measured recall-vs-mass ledger from the 64× embeddings rung
-#: (128k build × 128k query — run_scale_r9.build_tiles(64) of the
-#: 2000-row sf0.1 table; tools/scale/run_lsh_recall_r10.py →
-#: results_lsh_recall_r10.json, PERF.md round 10). Ground truth = exact
+#: (128k build × 128k query — a 64× tile of the 2000-row sf0.1 table;
+#: tools/scale/results_lsh_recall_r10.json, PERF.md round 10; the sweep
+#: script, run_lsh_recall_r10.py, is in commit 877f3e6). Ground truth = exact
 #: top-5 for a 500-probe sample. The calibration corpus has WEAK angular
 #: gaps (rotation-tiled synthetic vectors) — a regime unfavorable to
 #: angular LSH. Round 13 measured two MORE corpus classes at the same
@@ -737,9 +737,10 @@ RECALL_LEDGER_64X: tuple[dict, ...] = (
 )
 
 #: Round-13 organic ledger: bootstrap-resample of the sf0.1 embeddings
-#: ×64 (sigma=0.01 jitter + renorm — the run_sf1_corpus_r12 recipe), the
-#: duplicate-rich regime the engine's own dedup/near-dup workloads live
-#: in (tools/scale/run_lsh_recall_r13.py → results_lsh_recall_r13.json).
+#: ×64 (sigma=0.01 jitter + renorm — the tools/scale/rung.py sf1_corpus
+#: embeddings recipe), the duplicate-rich regime the engine's own
+#: dedup/near-dup workloads live in (tools/scale/results_lsh_recall_r13.json;
+#: the sweep script, run_lsh_recall_r13.py, is in commit 877f3e6).
 #: Top-k neighbors are jittered near-copies, so they collide in nearly
 #: every table: recall saturates (the r1=1.0 rows invert to t=1 via the
 #: perfect-recall special case). A 512k validation leg reproduced the
@@ -804,7 +805,8 @@ def lsh_recall_plan(
     measured p; p is NOT extrapolated (the p=12 row shows the signature
     explode + 65k-bucket overhead breaking the 1/2^p idealization). The
     ledger corpus is the weak-angular-gap synthetic rung — re-measure
-    with tools/scale/run_lsh_recall_r10.py and pass ``ledger=`` for a
+    with the sweep behind tools/scale/results_lsh_recall_r10.json
+    (run_lsh_recall_r10.py in commit 877f3e6) and pass ``ledger=`` for a
     corpus with real structure (recall per table will only improve).
 
     Returns a dict: ``route`` = "lsh" (+ n_planes/n_tables/

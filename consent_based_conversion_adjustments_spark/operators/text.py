@@ -59,10 +59,6 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def bpe_ish_token_count(col: Column | str) -> Column:
     """Count of BPE-ish lexical units: letter runs, digit runs, single
     punctuation marks — a cheap proxy for subword token counts."""

@@ -115,8 +115,9 @@ def run_adjustment(
     (``NearestNeighbors(algorithm='auto')``,
     nearest_consented_customers.py:67); here the choice is between
     DISTRIBUTED plans, so it lives at the pipeline dispatch. Explicit
-    ``impl=`` pins the strategy (the registered oracle queries pin
-    "sql"/"numpy"; the LSH variants pin "lsh").
+    ``impl=`` pins the strategy: the ``bench.py`` board pins "numpy", the
+    three ``*_grouped`` registrations pin "grouped", and only tests pin
+    "sql" (the ``*_lsh_*`` registrations call the LSH joins directly).
 
     ``check_id_uniqueness`` runs one eager count-vs-countDistinct pass per
     side and raises if the configured id columns do not key rows uniquely

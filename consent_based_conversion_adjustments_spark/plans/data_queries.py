@@ -388,7 +388,8 @@ def dedup_minhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one representative before banding; rep pairs expand back afterward
     (output-bound). Byte-identical to dedup_minhash — checked against the
     SAME oracle — while turning a boilerplate clique's banding cost from
-    s² shuffled rows into 1 (hot-band study: tools/scale/hot_band_ab_r9)."""
+    s² shuffled rows into 1 (hot-band study:
+    tools/scale/results_hotband_r9.json; script in commit 877f3e6)."""
     docs = read_table(spark, sf_dir, "documents")
     return D.minhash_neardup(
         docs, "text", "doc_id",
@@ -516,9 +517,10 @@ def _pretrain_kept_frames(spark: SparkSession, sf_dir: str):
     stage fans it out to one consumer per signature/band build, and
     without the pin each consumer re-derives the whole lang+quality+
     fingerprint chain from the documents scan. Fresh-JVM A/B
-    (tools/scale/run_scale_pipeline_r9.py): noise-level at sf0.1 (the
-    gate chain is cheap there) but 152.5 → 106.9 s at the 64×
-    identical-copy tiles — the win grows with raw-corpus size because
+    (tools/scale/results_pipeline_r9.json; script in commit 877f3e6):
+    noise-level at sf0.1 (the gate chain is cheap there) but 152.5 →
+    106.9 s at the 64× identical-copy tiles — the win grows with
+    raw-corpus size because
     kept1 is the post-exact-dedup survivor set, the SMALL end of the
     funnel, while the re-derived chain is the big end."""
     docs = read_table(spark, sf_dir, "documents")

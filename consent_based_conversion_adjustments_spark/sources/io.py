@@ -82,14 +82,6 @@ def parallelize_scan(df: DataFrame, min_parallelism: int | None = None) -> DataF
     return df.repartition(target)
 
 
-def read_dates_text(spark: SparkSession, path: str) -> DataFrame:
-    """S1 + P1: newline-separated ISO dates → DateType column ``date``.
-
-    reference: pipeline.py:331-333 (ReadFromText → Map(fromisoformat)).
-    """
-    return spark.read.text(path).select(F.to_date("value").alias("date"))
-
-
 def scan_between_dates(
     df: DataFrame,
     date_column: str,
@@ -146,14 +138,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines source; same schema guidance as CSV."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def write_adjustments_csv(
     data_adjusted: DataFrame,
     summary: DataFrame,
@@ -174,52 +158,3 @@ def write_adjustments_csv(
     summary.coalesce(1).write.mode("overwrite").option("header", True).csv(
         f"{base_path}/{date}/adjustments_summary"
     )
-
-
-def write_compacted_parquet(
-    df: DataFrame,
-    path: str,
-    target_file_mb: int = 256,
-    sample_rows: int = 10_000,
-) -> int:
-    """Writes parquet with file counts sized to a target file size — the
-    guard against the small-files problem (a 100 TB pipeline that writes
-    one file per shuffle partition floods the metastore/namenode and
-    slows every downstream scan).
-
-    Sizing: write a cross-partition pilot sample (``df.sample`` — not
-    ``limit``, which reads only the first partitions and is unrepresentative
-    on sorted/skewed data) as real parquet, measure its actual on-disk
-    bytes through the Hadoop FileSystem API (so the estimate includes true
-    encoding + compression, not an in-memory proxy), scale by the full row
-    count, and ``repartition`` to ``ceil(total / target)`` files. Costs one
-    count + one small pilot write — worth it on any output that downstream
-    jobs read more than once. Returns the partition count used.
-    """
-    import math
-
-    n_rows = df.count()
-    if n_rows == 0:
-        df.limit(0).write.mode("overwrite").parquet(path)
-        return 1
-
-    spark = df.sparkSession
-    fraction = min(1.0, sample_rows / n_rows)
-    pilot = df.sample(fraction=fraction, seed=7) if fraction < 1.0 else df
-    pilot_path = path.rstrip("/") + "__pilot"
-    pilot.coalesce(1).write.mode("overwrite").parquet(pilot_path)
-
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(pilot_path)
-    fs = jpath.getFileSystem(hconf)
-    pilot_bytes = fs.getContentSummary(jpath).getLength()
-    # metadata-only count (parquet footers), no data scan
-    pilot_rows = spark.read.parquet(pilot_path).count()
-    fs.delete(jpath, True)
-
-    est_row_bytes = max(1, pilot_bytes // max(pilot_rows, 1))
-    total_mb = n_rows * est_row_bytes / (1024 * 1024)
-    n_files = max(1, math.ceil(total_mb / target_file_mb))
-    df.repartition(n_files).write.mode("overwrite").parquet(path)
-    return n_files

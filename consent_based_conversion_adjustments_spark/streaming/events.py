@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.rounding import stable_round
 
@@ -125,50 +124,6 @@ def session_window_stats(
     )
 
 
-def streaming_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator: per-user running totals via
-    ``applyInPandasWithState`` (the escape hatch for operators Structured
-    Streaming lacks — arbitrary per-key state, Arrow-batched).
-
-    State = (n_events, total_value) per user, updated each micro-batch and
-    emitted in ``update`` mode. Works on a static frame too (degenerates to
-    a plain groupBy, which the batch-equivalence test exploits)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType(), False),
-            T.StructField("n_events", T.LongType(), False),
-            T.StructField("total_value", T.DoubleType(), True),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType(), False),
-            T.StructField("total", T.DoubleType(), False),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            [{"user_id": key[0], "n_events": n, "total_value": total}]
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def dedup_stream(
     events: DataFrame, id_cols: tuple[str, ...] = ("event_id",)
 ) -> DataFrame:
@@ -181,16 +136,6 @@ def dedup_stream(
     rather than the full stream history. The input must already carry a
     watermark (``stream_events_from_parquet`` does)."""
     return events.dropDuplicatesWithinWatermark(list(id_cols))
-
-
-def enrich_stream(events: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch hash-joins against
-    the static dimension (the planner treats the static side as a normal
-    batch relation, so all the usual join strategies apply; no state store
-    involved). No forced broadcast hint — a dimension table can outgrow the
-    broadcast limit at scale, and AQE promotes the join to broadcast at
-    runtime whenever the dim side actually is small."""
-    return events.join(dim, key, "left")
 
 
 def interval_bin_join(

@@ -1,48 +1,5 @@
-"""Bucketed co-located join: the plan must contain no shuffle Exchange."""
-
-import pytest
-import pyspark.sql.functions as F
-
-from consent_based_conversion_adjustments_spark.sources.bucketing import (
-    colocated_join,
-    write_bucketed,
-)
-from consent_based_conversion_adjustments_spark.sources.io import read_table
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    li = read_table(spark, SF, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = read_table(spark, SF, "orders").select(
-        "o_orderkey", "o_totalprice", "o_custkey"
-    )
-    write_bucketed(li, "li_bucketed", "l_orderkey", 8)
-    write_bucketed(orders, "orders_bucketed", "o_orderkey", 8)
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = colocated_join(
-                spark, "li_bucketed", "orders_bucketed",
-                "l_orderkey", "o_orderkey",
-            )
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # bucket co-location: no shuffle
-            # correctness: bucketed join result == plain join result
-            plain = li.join(orders, li.l_orderkey == orders.o_orderkey)
-            assert joined.count() == plain.count()
-            a = joined.agg(F.sum("l_quantity")).first()[0]
-            b = plain.agg(F.sum("l_quantity")).first()[0]
-            assert a == pytest.approx(b)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS orders_bucketed")
+"""Table-management operators: MERGE upsert, table diff, SCD2 history
+and parquet compaction."""
 
 
 def test_merge_upsert_three_clauses(spark):

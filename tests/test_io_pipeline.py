@@ -19,18 +19,10 @@ from consent_based_conversion_adjustments_spark.plans.relational import (
 from consent_based_conversion_adjustments_spark.sources.io import (
     date_sequence,
     max_date,
-    read_dates_text,
     scan_between_dates,
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_read_dates_text(spark, tmp_path):
-    path = tmp_path / "dates.txt"
-    path.write_text("2021-11-20\n2021-11-21\n")
-    out = read_dates_text(spark, str(path)).collect()
-    assert sorted(str(r["date"]) for r in out) == ["2021-11-20", "2021-11-21"]
 
 
 def test_scan_between_dates_pushes_filter(spark):
@@ -215,10 +207,7 @@ def test_prepare_pipeline_input_trigger_parity(spark, tmp_path):
     from consent_based_conversion_adjustments_spark.pipeline import (
         prepare_pipeline_input,
     )
-    from consent_based_conversion_adjustments_spark.sources.io import (
-        read_dates_text,
-        read_table,
-    )
+    from consent_based_conversion_adjustments_spark.sources.io import read_table
 
     events = read_table(spark, SF, "events").withColumn(
         "d", F.to_date("ts")
@@ -226,26 +215,20 @@ def test_prepare_pipeline_input_trigger_parity(spark, tmp_path):
     dates = prepare_pipeline_input(spark, events, "d", 5, str(tmp_path))
     assert len(dates) == 5
     back = sorted(
-        str(r["date"]) for r in read_dates_text(spark, str(tmp_path / "dates")).collect()
+        r["value"] for r in spark.read.text(str(tmp_path / "dates")).collect()
     )
     assert back == sorted(dates)
 
 
 def test_csv_json_round_trip(spark, tmp_path):
-    from consent_based_conversion_adjustments_spark.sources.io import (
-        read_csv,
-        read_json,
-    )
+    from consent_based_conversion_adjustments_spark.sources.io import read_csv
 
     df = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", 2.5)], ["id", "name", "score"]
     )
     df.coalesce(1).write.option("header", True).csv(str(tmp_path / "c"))
-    df.coalesce(1).write.json(str(tmp_path / "j"))
     c = read_csv(spark, str(tmp_path / "c"))
-    j = read_json(spark, str(tmp_path / "j"), schema=df.schema)
     assert sorted(map(tuple, c.collect())) == sorted(map(tuple, df.collect()))
-    assert sorted(map(tuple, j.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_notebook_scale_workload_conservation(spark):
@@ -287,26 +270,6 @@ def test_approx_distinct_within_tolerance(spark):
     rows = approx_distinct_parts(spark, "/root/testdata/sf0.001").collect()
     for r in rows:
         assert r["approx_parts"] == pytest.approx(r["exact_parts"], rel=0.05)
-
-
-def test_write_compacted_parquet(spark, tmp_path):
-    from consent_based_conversion_adjustments_spark.sources.io import (
-        write_compacted_parquet,
-    )
-
-    df = spark.range(50_000).selectExpr(
-        "id", "repeat('x', 100) AS payload"
-    ).repartition(32)
-    out = str(tmp_path / "compacted")
-    n_files = write_compacted_parquet(df, out, target_file_mb=1)
-    import glob
-
-    parts = glob.glob(out + "/part-*.parquet")
-    # one file per computed partition, far fewer than the 32 input
-    # partitions would have produced, and the data round-trips
-    assert len(parts) == n_files
-    assert 1 <= n_files < 32
-    assert spark.read.parquet(out).count() == 50_000
 
 
 def test_schema_evolution_merge(spark, tmp_path):

@@ -39,41 +39,6 @@ def test_streaming_tumbling_equals_batch(spark):
     assert got == batch
 
 
-def test_stateful_streaming_user_totals(spark):
-    """applyInPandasWithState running totals: after draining the stream the
-    per-user state must equal the batch groupBy."""
-    from consent_based_conversion_adjustments_spark.streaming.events import (
-        streaming_user_totals,
-    )
-
-    events = read_table(spark, SF, "events")
-    batch = {
-        r["user_id"]: (r["n"], round(r["total"], 6))
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.coalesce("value", F.lit(0.0))).alias("total"),
-        )
-        .collect()
-    }
-    stream = stream_events_from_parquet(spark, SF).drop("props")
-    q = (
-        streaming_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("user_totals_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "select user_id, max(n_events) n_events, max(total_value) total_value "
-        "from user_totals_test group by user_id"
-    ).collect()
-    got = {r["user_id"]: (r["n_events"], round(r["total_value"], 6)) for r in rows}
-    assert got == batch
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """Append-mode windowed agg with a 30-min watermark: an event arriving
     in a later file but event-timed before the advanced watermark is
@@ -235,13 +200,11 @@ def test_interval_bin_join_microsecond_boundaries(spark):
 
 def test_streaming_dedup_and_enrich(spark, tmp_path):
     """Exactly-once ingestion: re-delivered event ids within the watermark
-    window are dropped; the surviving stream enriches against a static
-    dimension via a broadcast stream-static join."""
+    window are dropped."""
     import datetime
 
     from consent_based_conversion_adjustments_spark.streaming.events import (
         dedup_stream,
-        enrich_stream,
     )
 
     t0 = datetime.datetime(2024, 1, 1)
@@ -261,16 +224,13 @@ def test_streaming_dedup_and_enrich(spark, tmp_path):
     f1.coalesce(1).write.mode("overwrite").parquet(src)
     f2.coalesce(1).write.mode("append").parquet(src)
 
-    dim = spark.createDataFrame(
-        [(10, "alpha"), (20, "beta")], "user_id long, segment string"
-    )
     stream = (
         spark.readStream.schema(f1.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "10 minutes")
     )
-    out = enrich_stream(dedup_stream(stream), dim, "user_id")
+    out = dedup_stream(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("dedup_test")
@@ -281,8 +241,6 @@ def test_streaming_dedup_and_enrich(spark, tmp_path):
     q.awaitTermination(120)
     rows = spark.sql("select * from dedup_test").collect()
     assert sorted(r["event_id"] for r in rows) == [1, 2, 3, 4]
-    segs = {r["event_id"]: r["segment"] for r in rows}
-    assert segs == {1: "alpha", 2: "alpha", 3: "beta", 4: "beta"}
 
 
 def test_stream_stream_time_bounded_join(spark, tmp_path):
