@@ -5,9 +5,9 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": 0.1}
 
 Each query is forced end-to-end through the noop sink (full column
-evaluation, no driver collect). The flagship similarity join is benched in
-both physical strategies (sql = crossJoin+window, numpy = broadcast-matrix
-mapInPandas) — the headline uses the engine default.
+evaluation, no driver collect). Every entry is the registered query of the
+same name: the flagship ``cocoa_*_adjust`` queries run ``impl="auto"``, the
+route ``choose_impl`` picks (the numpy kernel at sf0.1).
 """
 
 from __future__ import annotations
@@ -30,9 +30,9 @@ from consent_based_conversion_adjustments_spark.session import get_spark  # noqa
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 HEADLINE = [
-    ("cocoa_knn_adjust", lambda s, d: cocoa_queries.knn_adjust(s, d, impl="numpy")),
-    ("cocoa_radius_adjust", lambda s, d: cocoa_queries.radius_adjust(s, d, impl="numpy")),
-    ("cocoa_percentile_adjust", lambda s, d: cocoa_queries.percentile_adjust(s, d, impl="numpy")),
+    ("cocoa_knn_adjust", cocoa_queries.knn_adjust),
+    ("cocoa_radius_adjust", cocoa_queries.radius_adjust),
+    ("cocoa_percentile_adjust", cocoa_queries.percentile_adjust),
     ("cocoa_knn_lsh_pairs", cocoa_queries.knn_lsh_pairs),
     ("q1_pricing_summary", relational.q1_pricing_summary),
     ("q3_top_unshipped", relational.q3_top_unshipped),

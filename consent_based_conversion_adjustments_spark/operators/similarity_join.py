@@ -3,7 +3,9 @@
 The reference builds a sklearn ``NearestNeighbors`` index over the consenting
 ("build") side and probes it with every non-consenting row
 (reference: nearest_consented_customers.py:46-264). Spark has no kNN join, so
-this module provides four physical routes; ``choose_impl`` picks one for
+this module provides four physical routes. ``match_join`` runs a kNN or
+radius join on the route its ``impl`` names (``percentile_radius`` does the
+same for the nearest-distance pass); ``choose_impl`` picks the route for
 ``impl="auto"``:
 
 ``impl="sql"`` — pure DataFrame composition: broadcast cross join →
@@ -53,35 +55,6 @@ from ..functions.distance import metric_distance, parse_minkowski
 
 BUILD_FEATURES = "__build_features"
 DISTANCE = "distance"
-
-
-def _build_side(build: DataFrame, build_id: str, features: str) -> DataFrame:
-    return build.select(
-        F.col(build_id).alias(build_id), F.col(features).alias(BUILD_FEATURES)
-    )
-
-
-def _pairs_with_distance(
-    probe: DataFrame,
-    build: DataFrame,
-    metric: str,
-    build_id: str,
-    features: str,
-    feature_width: int | None = None,
-) -> DataFrame:
-    """Broadcast cross join + distance column; features pruned afterwards.
-
-    ``feature_width`` (known from the encoder) switches the distance to the
-    allocation-free unrolled form — essential when this evaluates O(m·n)
-    pairs inside the broadcast nested-loop join."""
-    pairs = probe.crossJoin(F.broadcast(_build_side(build, build_id, features)))
-    pairs = pairs.withColumn(
-        DISTANCE,
-        metric_distance(
-            metric, F.col(features), F.col(BUILD_FEATURES), width=feature_width
-        ),
-    )
-    return pairs.drop(features, BUILD_FEATURES)
 
 
 def resolve_k(number_nearest_neighbors: float, n_build: int) -> int:
@@ -277,140 +250,117 @@ def _join_grouped(
     return payload.join(cand, "__pf").drop("__pf")
 
 
-def _min_distance_grouped(
+def _join_sql(
     probe: DataFrame,
     build: DataFrame,
     *,
-    metric: str = "manhattan",
-    probe_id: str = "probe_id",
-    features: str = "features",
-    feature_width: int | None = None,
+    k: int | None = None,
+    radius: float | None = None,
+    metric: str,
+    probe_id: str,
+    build_id: str,
+    features: str,
+    feature_width: int | None,
 ) -> DataFrame:
-    """Dictionary nearest-distance: min over the class grid per probe
-    class, broadcast back onto probe rows (d_p rows of state)."""
-    grid = _class_grid(probe, build, metric, features, feature_width)
-    mins = grid.groupBy("__pf").agg(
-        F.min(DISTANCE).alias("distance_to_nearest_neighbor")
+    """Broadcast cross join + Catalyst distance column, then the
+    ``row_number`` top-k (``k``), the theta predicate (``radius``), or —
+    neither given — every pair, for the nearest-distance min. Features are
+    pruned after the distance. ``feature_width`` (known from the encoder)
+    switches the distance to the allocation-free unrolled form — essential
+    when this evaluates O(m·n) pairs inside the broadcast nested-loop
+    join."""
+    side = build.select(
+        F.col(build_id).alias(build_id), F.col(features).alias(BUILD_FEATURES)
     )
-    return (
-        probe.select(probe_id, F.col(features).alias("__pf"))
-        .join(F.broadcast(mins), "__pf")
-        .select(probe_id, "distance_to_nearest_neighbor")
-    )
+    pairs = probe.crossJoin(F.broadcast(side)).withColumn(
+        DISTANCE,
+        metric_distance(
+            metric, F.col(features), F.col(BUILD_FEATURES), width=feature_width
+        ),
+    ).drop(features, BUILD_FEATURES)
+    if k is not None:
+        w = Window.partitionBy(probe_id).orderBy(
+            F.col(DISTANCE).asc(), F.col(build_id).asc()
+        )
+        return (
+            pairs.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .drop("__rn")
+        )
+    if radius is not None:
+        return pairs.filter(F.col(DISTANCE) <= radius)
+    return pairs
 
 
-def knn_join(
+def match_join(
     probe: DataFrame,
     build: DataFrame,
-    k: int,
     *,
+    k: float | None = None,
+    radius: float | None = None,
+    impl: str,
     metric: str = "manhattan",
     probe_id: str = "probe_id",
     build_id: str = "build_id",
     features: str = "features",
-    impl: str = "sql",
     feature_width: int | None = None,
-    build_matrix=None,
+    build_matrix: tuple[np.ndarray, np.ndarray] | None = None,
+    n_build: int | None = None,
 ) -> DataFrame:
-    """Top-k-per-probe similarity join.
+    """The similarity join on one physical route: the top-``k`` build rows
+    per probe (reference: nearest_consented_customers.py:184-221), or every
+    build row within ``radius`` (:153-182). ``impl`` is a route, never
+    "auto" — ``resolve_auto_impl`` resolves that first.
 
-    Returns all probe columns (features dropped) + (build_id, distance),
-    exactly k rows per probe. reference: nearest_consented_customers.py:184-221.
+    Returns all probe columns but the features, plus (build_id, distance).
+    kNN gives exactly k rows per probe (at most k on lsh). A radius probe
+    with no match has no row: the matched/unmatched split (:362-364) is an
+    anti-join against the output's probe ids. ``k`` may be a proportion of
+    the build side (``resolve_k``): the numpy kernel resolves it from the
+    matrix it collects anyway; the other routes from ``n_build``, counted
+    when not supplied.
     """
+    if (k is None) == (radius is None):
+        raise ValueError("exactly one of k / radius required")
     if impl == "numpy":
         return _join_numpy(
-            probe, build, k=k, metric=metric, build_id=build_id,
-            features=features, build_matrix=build_matrix,
-        )
-    if impl == "grouped":
-        return _join_grouped(
-            probe, build, k=k, metric=metric, build_id=build_id,
-            features=features, feature_width=feature_width,
-        )
-    pairs = _pairs_with_distance(
-        probe, build, metric, build_id, features, feature_width
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.col(DISTANCE).asc(), F.col(build_id).asc())
-    return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def radius_join(
-    probe: DataFrame,
-    build: DataFrame,
-    radius: float,
-    *,
-    metric: str = "manhattan",
-    build_id: str = "build_id",
-    features: str = "features",
-    impl: str = "sql",
-    feature_width: int | None = None,
-    build_matrix=None,
-) -> DataFrame:
-    """All build rows within ``radius`` of each probe (range theta-join).
-
-    Probes with zero matches simply produce no rows — the matched/unmatched
-    split (reference: nearest_consented_customers.py:153-182, 362-364) is an
-    anti-join against this output's probe ids.
-    """
-    if impl == "numpy":
-        return _join_numpy(
-            probe, build, radius=radius, metric=metric, build_id=build_id,
-            features=features, build_matrix=build_matrix,
-        )
-    if impl == "grouped":
-        return _join_grouped(
-            probe, build, radius=radius, metric=metric, build_id=build_id,
-            features=features, feature_width=feature_width,
-        )
-    pairs = _pairs_with_distance(
-        probe, build, metric, build_id, features, feature_width
-    )
-    return pairs.filter(F.col(DISTANCE) <= radius)
-
-
-def min_distance_per_probe(
-    probe: DataFrame,
-    build: DataFrame,
-    *,
-    metric: str = "manhattan",
-    probe_id: str = "probe_id",
-    build_id: str = "build_id",
-    features: str = "features",
-    impl: str = "sql",
-    feature_width: int | None = None,
-    build_matrix=None,
-) -> DataFrame:
-    """Per-probe distance to the nearest build row (J5 pass 1 / J6).
-
-    The reference runs a full kNN(k=1) pass for this
-    (nearest_consented_customers.py:518-523); relationally it collapses to a
-    min-aggregation over the distance join — Catalyst executes it as a
-    partial/final min with no pair materialization beyond the scan.
-    """
-    if impl == "numpy":
-        pairs = _join_numpy(
-            probe.select(probe_id, features), build, k=1, metric=metric,
+            probe, build, k=k, radius=radius, metric=metric,
             build_id=build_id, features=features, build_matrix=build_matrix,
         )
-        return pairs.select(
-            probe_id, F.col(DISTANCE).alias("distance_to_nearest_neighbor")
-        )
+    if k is not None:
+        if n_build is None:
+            n_build = build.count()
+        k = resolve_k(k, n_build)
     if impl == "grouped":
-        return _min_distance_grouped(
-            probe, build, metric=metric, probe_id=probe_id,
-            features=features, feature_width=feature_width,
+        return _join_grouped(
+            probe, build, k=k, radius=radius, metric=metric,
+            build_id=build_id, features=features, feature_width=feature_width,
         )
-    pairs = _pairs_with_distance(
-        probe.select(probe_id, features), build, metric, build_id, features,
-        feature_width,
-    )
-    return pairs.groupBy(probe_id).agg(
-        F.min(DISTANCE).alias("distance_to_nearest_neighbor")
-    )
+    if impl == "sql":
+        return _join_sql(
+            probe, build, k=k, radius=radius, metric=metric,
+            probe_id=probe_id, build_id=build_id, features=features,
+            feature_width=feature_width,
+        )
+    if impl == "lsh":
+        kw = dict(
+            metric=metric, probe_id=probe_id, build_id=build_id,
+            features=features,
+        )
+        if k is not None:
+            matched = knn_join_lsh(
+                probe, build, k, feature_width, n_rows_hint=n_build, **kw
+            )
+        else:
+            matched = radius_join_lsh(probe, build, radius, feature_width, **kw)
+        # re-attach the probe payload columns (the LSH joins return narrow
+        # (probe_id, build_id, distance) rows) — an equi-join on probe_id,
+        # shuffle-safe at any probe size
+        payload = probe.drop(features)
+        if len(payload.columns) > 1:
+            matched = matched.join(payload, probe_id)
+        return matched
+    raise ValueError(f"unknown impl {impl!r}")
 
 
 def percentile_radius(
@@ -426,23 +376,55 @@ def percentile_radius(
     feature_width: int | None = None,
     build_matrix=None,
 ) -> float:
-    """Auto-radius: the ``percentile`` quantile of nearest-neighbor distances.
+    """Auto-radius: the ``percentile`` quantile of each probe's distance to
+    its nearest build row (J5 pass 1 / J6).
 
     Guarantees ≥ percentile·100% of probes match in the subsequent radius
     join (reference: min_radius_by_percentile,
     nearest_consented_customers.py:140-143; README.md:45-48). Uses Spark's
     exact ``percentile`` (linear interpolation — same as pandas
-    ``quantile``).
+    ``quantile``). The reference runs a full kNN(k=1) pass for the nearest
+    distances (nearest_consented_customers.py:518-523); per route:
+
+    - numpy: the k=1 kernel over the shared build matrix;
+    - grouped: the min over the class grid per probe class, broadcast back
+      onto probe rows (d_p rows of state);
+    - sql: a min aggregation over the distance join — Catalyst runs it as a
+      partial/final min with no pair materialization beyond the scan;
+    - lsh: the k=1 LSH join. Approximate in one direction only: a missed
+      true nearest neighbor can INFLATE a probe's nearest distance, never
+      shrink it, so the radius errs toward matching ≥ percentile·100% of
+      probes (the guarantee the reference mode exists for).
     """
-    nearest = min_distance_per_probe(
-        probe, build, metric=metric, probe_id=probe_id, build_id=build_id,
-        features=features, impl=impl, feature_width=feature_width,
-        build_matrix=build_matrix,
-    )
+    narrow = probe.select(probe_id, features)
+    if impl == "numpy":
+        nearest = _join_numpy(
+            narrow, build, k=1, metric=metric, build_id=build_id,
+            features=features, build_matrix=build_matrix,
+        )
+    elif impl == "grouped":
+        mins = (
+            _class_grid(probe, build, metric, features, feature_width)
+            .groupBy("__pf")
+            .agg(F.min(DISTANCE).alias(DISTANCE))
+        )
+        nearest = probe.select(F.col(features).alias("__pf")).join(
+            F.broadcast(mins), "__pf"
+        )
+    elif impl == "sql":
+        nearest = _join_sql(
+            narrow, build, metric=metric, probe_id=probe_id,
+            build_id=build_id, features=features, feature_width=feature_width,
+        ).groupBy(probe_id).agg(F.min(DISTANCE).alias(DISTANCE))
+    elif impl == "lsh":
+        nearest = knn_join_lsh(
+            narrow, build, 1, feature_width, metric=metric,
+            probe_id=probe_id, build_id=build_id, features=features,
+        )
+    else:
+        raise ValueError(f"unknown impl {impl!r}")
     row = nearest.select(
-        F.expr(
-            f"percentile(distance_to_nearest_neighbor, {percentile!r})"
-        ).alias("radius")
+        F.expr(f"percentile({DISTANCE}, {percentile!r})").alias("radius")
     ).first()
     return float(row["radius"])
 
@@ -579,130 +561,39 @@ def similarity_join(
     feature_width: int | None = None,
     build_matrix=None,
 ) -> DataFrame:
-    """Mode dispatch (J4): exactly one of k / radius / percentile.
+    """Mode dispatch (J4): exactly one of k / radius / percentile, answered
+    by one ``match_join`` call (a percentile becomes a radius through
+    ``percentile_radius`` on the same route).
 
     reference: nearest_consented_customers.py:223-264, 470-524. Dispatch is
     on ``is not None`` — deliberately fixing the reference's truthiness bug
     (line 513) so ``radius=0.0`` is a valid empty-match join (FIXTURES.md F5).
 
     ``impl="auto"`` (the default, mirroring the reference's
-    ``algorithm='auto'``) resolves to the exact broadcast kernel or the
-    LSH route via ``choose_impl`` — two count() jobs when ``n_probe`` /
-    ``n_build`` aren't supplied, then the measured crossover decides.
-    ``impl="lsh"`` forces the beyond-broadcast route for every mode
-    (kNN / radius / percentile) — neither side is collected or broadcast;
-    requires ``feature_width``. Approximate (recall set by the LSH
-    amplification), intended for build sides past the broadcast limit.
+    ``algorithm='auto'``) resolves the route via ``resolve_auto_impl`` —
+    two count() jobs when ``n_probe`` / ``n_build`` aren't supplied, then
+    the measured budgets of ``choose_impl`` decide. ``impl="lsh"`` forces
+    the beyond-broadcast route for every mode (kNN / radius / percentile)
+    — neither side is collected or broadcast; requires ``feature_width``.
+    Approximate (recall set by the LSH amplification), intended for build
+    sides past the broadcast limit.
     """
     if impl == "auto":
         impl, n_probe, n_build = resolve_auto_impl(
             probe, build, features, feature_width, n_probe, n_build
         )
-    if impl == "lsh":
-        if feature_width is None:
-            raise ValueError("impl='lsh' requires feature_width")
-        if config.number_nearest_neighbors is not None:
-            if n_build is None:
-                n_build = build.count()
-            k = resolve_k(config.number_nearest_neighbors, n_build)
-            matched = knn_join_lsh(
-                probe, build, k, feature_width, metric=config.metric,
-                probe_id=probe_id, build_id=build_id, features=features,
-                n_rows_hint=n_build,
-            )
-        else:
-            radius = config.radius
-            if radius is None:
-                radius = percentile_radius_lsh(
-                    probe, build, config.percentile, feature_width,
-                    metric=config.metric, probe_id=probe_id,
-                    build_id=build_id, features=features,
-                )
-            matched = radius_join_lsh(
-                probe, build, radius, feature_width, metric=config.metric,
-                probe_id=probe_id, build_id=build_id, features=features,
-            )
-        # re-attach the probe payload columns (the LSH joins return narrow
-        # (probe_id, build_id, distance) rows; features stay dropped) —
-        # an equi-join on probe_id, shuffle-safe at any probe size
-        payload = probe.drop(features)
-        if len(payload.columns) > 1:
-            matched = matched.join(payload, probe_id)
-        return matched
-    if config.number_nearest_neighbors is not None:
-        if impl == "numpy":
-            # the numpy kernel collects the build side anyway — resolve and
-            # validate k there instead of paying a separate count() job
-            return _join_numpy(
-                probe, build, k=config.number_nearest_neighbors,
-                metric=config.metric, build_id=build_id, features=features,
-                build_matrix=build_matrix,
-            )
-        if n_build is None:
-            n_build = build.count()
-        k = resolve_k(config.number_nearest_neighbors, n_build)
-        return knn_join(
-            probe, build, k, metric=config.metric, probe_id=probe_id,
-            build_id=build_id, features=features, impl=impl,
-            feature_width=feature_width,
-        )
-    if config.radius is not None:
-        return radius_join(
-            probe, build, config.radius, metric=config.metric,
-            build_id=build_id, features=features, impl=impl,
-            feature_width=feature_width, build_matrix=build_matrix,
-        )
-    radius = percentile_radius(
-        probe, build, config.percentile, metric=config.metric,
-        probe_id=probe_id, build_id=build_id, features=features, impl=impl,
-        feature_width=feature_width, build_matrix=build_matrix,
+    kw = dict(
+        metric=config.metric, probe_id=probe_id, build_id=build_id,
+        features=features, impl=impl, feature_width=feature_width,
+        build_matrix=build_matrix,
     )
-    return radius_join(
-        probe, build, radius, metric=config.metric,
-        build_id=build_id, features=features, impl=impl,
-        feature_width=feature_width, build_matrix=build_matrix,
+    radius = config.radius
+    if config.percentile is not None:
+        radius = percentile_radius(probe, build, config.percentile, **kw)
+    return match_join(
+        probe, build, k=config.number_nearest_neighbors, radius=radius,
+        n_build=n_build, **kw,
     )
-
-
-def auto_n_planes(
-    n_probe: int,
-    n_build: int,
-    n_tables: int = 8,
-    target_mass_per_row: int = 64,
-    min_planes: int = 4,
-    max_planes: int = 24,
-) -> int:
-    """Bucket-density-aware hyperplane count for the LSH joins.
-
-    The bucketed co-group's cost is the candidate mass
-    M = Σ_(table, sig) |P_sig|·|B_sig| ≈ n_probe·n_build·n_tables / 2^p
-    under uniform occupancy — measured within 2.2× of exact on the 64×
-    embeddings rung (tools/scale/results_r9.json: predicted 8.19e9 vs
-    8.52e9 at p=4; 1.28e8 vs 1.70e8 at p=10). Held at a FIXED p, a G×
-    data growth costs G² in mass: the sf0.1→64× leg went 2.09M→8.52B
-    mass (4069×) and 1.9→210 s. Scaling p by log2(G) restores linear
-    growth: p=10 at 64× cut the same query to 10.5 s (20×).
-
-    This helper picks the smallest p (≥ ``min_planes``) whose expected
-    mass is ≤ ``target_mass_per_row``·(n_probe + n_build) — i.e. a
-    candidate budget LINEAR in the data. Recall per table falls as
-    collision^p, so when raising p materially, re-buy recall with more
-    ``n_tables`` (OR-amplification). Measured at the 64× rung
-    (PERF.md round 10, tools/scale/results_lsh_recall_r10.json):
-    recall@5 grows LINEARLY with n_tables at fixed p (0.070/0.124/0.230
-    for 4/8/16 tables at p=10) at proportional mass/time, and recall
-    per unit mass is ~constant — OR-amplification trades cost for
-    recall on a straight frontier, it does not beat it. Corpora with
-    weak angular gaps should use the exact blocked-BLAS paths when
-    recall must stay high. Deliberately a helper, not an operator
-    default: the registered oracle queries need plan-deterministic
-    bucket counts.
-    """
-    import math
-
-    budget = max(1, target_mass_per_row * (n_probe + n_build))
-    p = math.ceil(math.log2(max(2.0, n_probe * n_build * n_tables / budget)))
-    return max(min_planes, min(max_planes, p))
 
 
 #: Measured recall-vs-mass ledger from the 64× embeddings rung
@@ -779,7 +670,7 @@ def lsh_recall_plan(
     """Recall-aware LSH dispatch — the PERF.md round-10 conclusion as
     code (VERDICT r10 §Next #6): given a recall floor and a candidate-
     mass budget LINEAR in the data (``target_mass_per_row·(n_build +
-    n_query)``, auto_n_planes' budget shape), either return the
+    n_query)``), either return the
     (n_planes, n_tables) meeting the floor within budget, or recommend
     the exact blocked-BLAS route (cosine_neardup_blas / SemDeDup's
     cluster-pruned pass).
@@ -957,9 +848,9 @@ def lsh_recall_measured(
     # impl="numpy": the chunked-BLAS kernel shares the dot-product
     # distance shape with knn_join_lsh's re-rank AND the oracle's
     # _EUCLID replay — one distance formulation across all three legs
-    exact = knn_join(
-        sample, build, fetch, metric=metric, probe_id=probe_id,
-        build_id=build_id, features=features, impl="numpy",
+    exact = match_join(
+        sample, build, k=fetch, impl="numpy", metric=metric,
+        probe_id=probe_id, build_id=build_id, features=features,
         feature_width=feature_width,
     )
     lsh = knn_join_lsh(
@@ -1042,6 +933,8 @@ def _lsh_bucket_matches(
     """
     from .similarity_search import _signature_array
 
+    if feature_width is None:
+        raise ValueError("the LSH route (impl='lsh') requires feature_width")
     sig = _signature_array(
         features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
     )
@@ -1210,37 +1103,6 @@ def radius_join_lsh(
     return local.groupBy(probe_id, build_id).agg(
         F.min(DISTANCE).alias(DISTANCE)
     )
-
-
-def percentile_radius_lsh(
-    probe: DataFrame,
-    build: DataFrame,
-    percentile: float,
-    feature_width: int,
-    *,
-    metric: str = "manhattan",
-    probe_id: str = "probe_id",
-    build_id: str = "build_id",
-    features: str = "features",
-    n_planes: int = 4,
-    n_tables: int = 8,
-) -> float:
-    """Percentile pass 1 beyond broadcast: nearest-candidate distance per
-    probe from the k=1 LSH join, then the exact quantile over that column.
-
-    Approximate in one direction only — a missed true nearest neighbor can
-    INFLATE a probe's nearest-distance, never shrink it, so the resulting
-    radius errs toward matching ≥ percentile·100% of probes (the guarantee
-    the reference mode exists for)."""
-    nearest = knn_join_lsh(
-        probe.select(probe_id, features), build, 1, feature_width,
-        metric=metric, probe_id=probe_id, build_id=build_id,
-        features=features, n_planes=n_planes, n_tables=n_tables,
-    )
-    row = nearest.select(
-        F.expr(f"percentile({DISTANCE}, {percentile!r})").alias("radius")
-    ).first()
-    return float(row["radius"])
 
 
 # ---------------------------------------------------------------------------

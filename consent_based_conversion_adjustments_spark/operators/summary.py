@@ -53,12 +53,3 @@ def summary_statistics(
             "total_matched_conversion_value"
         ),
     )
-
-
-def distance_statistics(
-    data_adjusted: DataFrame, col: str = "average_distance"
-) -> DataFrame:
-    """``describe()`` of a distance column (A5 diagnostic)."""
-    return data_adjusted.select(col).summary(
-        "count", "mean", "stddev", "min", "25%", "50%", "75%", "max"
-    )

@@ -40,7 +40,6 @@ from .operators.similarity_join import (
     _collect_build_matrix,
     adjust_partials_numpy,
     percentile_radius,
-    percentile_radius_lsh,
     resolve_auto_impl,
     similarity_join,
 )
@@ -108,16 +107,17 @@ def run_adjustment(
     """The full per-date adjustment query. Returns lazy DataFrames.
 
     ``impl="auto"`` (default) resolves the physical join strategy ONCE up
-    front via ``choose_impl`` — two count() jobs, then the measured
-    ~30k-probe-row / 128 MB-build-matrix crossover (PERF.md round 11)
-    picks the exact broadcast kernel or the beyond-broadcast LSH route.
-    The reference makes the same call inside sklearn
-    (``NearestNeighbors(algorithm='auto')``,
+    front via ``choose_impl`` — two count() jobs, then the measured budgets
+    (a 1e8-pair grid and a 128 MB build matrix, PERF.md rounds 11-12) pick
+    the numpy broadcast kernel, the grouped dictionary kernel or the
+    beyond-broadcast LSH route. The reference makes the same call inside
+    sklearn (``NearestNeighbors(algorithm='auto')``,
     nearest_consented_customers.py:67); here the choice is between
     DISTRIBUTED plans, so it lives at the pipeline dispatch. Explicit
-    ``impl=`` pins the strategy: the ``bench.py`` board pins "numpy", the
-    three ``*_grouped`` registrations pin "grouped", and only tests pin
-    "sql" (the ``*_lsh_*`` registrations call the LSH joins directly).
+    ``impl=`` pins the strategy: the three ``*_grouped`` registrations pin
+    "grouped" and ``tools/audit_plans.py`` pins "sql" and "numpy" to audit
+    their plans; the ``bench.py`` board and the other registrations run
+    "auto" (the ``*_lsh_*`` registrations call the LSH joins directly).
 
     ``check_id_uniqueness`` runs one eager count-vs-countDistinct pass per
     side and raises if the configured id columns do not key rows uniquely
@@ -174,33 +174,21 @@ def run_adjustment(
         build_matrix = _collect_build_matrix(build, CONSENT_ID, "features")
     cfg = config
     if config.percentile is not None:
-        # resolve the auto-radius once (one eager percentile pass) so the
-        # matched-pairs path and the fused adjust path share it; on the
-        # LSH route the resolution itself must stay beyond-broadcast
-        if impl == "lsh":
-            r = percentile_radius_lsh(
-                probe,
-                build,
-                config.percentile,
-                encoder.width,
-                metric=config.metric,
-                probe_id=PROBE_ID,
-                build_id=CONSENT_ID,
-                features="features",
-            )
-        else:
-            r = percentile_radius(
-                probe,
-                build,
-                config.percentile,
-                metric=config.metric,
-                probe_id=PROBE_ID,
-                build_id=CONSENT_ID,
-                features="features",
-                impl=impl,
-                feature_width=encoder.width,
-                build_matrix=build_matrix,
-            )
+        # resolve the auto-radius once (one eager percentile pass on the
+        # chosen route) so the matched-pairs path and the fused adjust path
+        # share it
+        r = percentile_radius(
+            probe,
+            build,
+            config.percentile,
+            metric=config.metric,
+            probe_id=PROBE_ID,
+            build_id=CONSENT_ID,
+            features="features",
+            impl=impl,
+            feature_width=encoder.width,
+            build_matrix=build_matrix,
+        )
         cfg = dataclasses.replace(config, percentile=None, radius=r)
     pairs = similarity_join(
         probe,

@@ -1106,26 +1106,27 @@ def _lsh_adjust_tail(probe: DataFrame, build: DataFrame, pairs: DataFrame) -> Da
 
 def percentile_lsh_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percentile mode beyond broadcast, run whole: pass 1 =
-    `percentile_radius_lsh` (per-probe LSH nearest distance → exact
-    percentile; a missed true nearest can only INFLATE the radius, so the
-    ≥ P%-matched guarantee the reference mode exists for is preserved),
+    `percentile_radius` on the lsh route (per-probe LSH nearest distance →
+    exact percentile; a missed true nearest can only INFLATE the radius, so
+    the ≥ P%-matched guarantee the reference mode exists for is preserved),
     pass 2 = LSH radius join at that radius feeding the same softmax +
     scatter-add kernel. reference: nearest_consented_customers.py:199-231
     (percentile mode) + 470-524 (redistribution)."""
     from ..operators.similarity_join import (
-        percentile_radius_lsh,
+        percentile_radius,
         radius_join_lsh,
     )
 
     probe, build = _emb_probe_build(spark, sf_dir)
-    radius = percentile_radius_lsh(
+    radius = percentile_radius(
         probe.select("probe_id", "features"),
         build.select("consent_id", "features"),
         PERCENTILE,
-        64,
         metric="euclidean",
         probe_id="probe_id",
         build_id="consent_id",
+        impl="lsh",
+        feature_width=64,
     )
     pairs = radius_join_lsh(
         probe.select("probe_id", "features"),

@@ -6,10 +6,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from consent_based_conversion_adjustments_spark.operators.similarity_join import (
-    knn_join,
-    min_distance_per_probe,
+    match_join,
     percentile_radius,
-    radius_join,
     resolve_k,
 )
 
@@ -45,7 +43,7 @@ def _frames(spark, n_probe=7, n_build=11, width=5, seed=3):
 def test_knn_returns_exactly_k_per_probe(spark, impl):
     """reference: nearest_consented_customers_test.py:53-60 (invariant 7)."""
     probe, build = _frames(spark)
-    out = knn_join(probe, build, 4, probe_id="pid", build_id="bid", impl=impl)
+    out = match_join(probe, build, k=4, probe_id="pid", build_id="bid", impl=impl)
     counts = out.groupBy("pid").count().collect()
     assert len(counts) == 7
     assert all(r["count"] == 4 for r in counts)
@@ -56,20 +54,37 @@ def test_knn_returns_exactly_k_per_probe(spark, impl):
     ["manhattan", "euclidean", "cosine", "hamming", "chebyshev", "minkowski:3"],
 )
 def test_impls_agree(spark, metric):
+    """The three exact routes agree pairwise on kNN, on radius and on the
+    nearest-distance pass (distances up to float reassociation: numpy
+    computes in BLAS form, sql and grouped in Catalyst)."""
+    from itertools import combinations
+
     probe, build = _frames(spark, n_probe=23, n_build=17, width=6)
-    a = (
-        knn_join(probe, build, 5, metric=metric, probe_id="pid", build_id="bid", impl="sql")
-        .orderBy("pid", "distance", "bid")
-        .toPandas()
-    )
-    b = (
-        knn_join(probe, build, 5, metric=metric, probe_id="pid", build_id="bid", impl="numpy")
-        .orderBy("pid", "distance", "bid")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), b.reset_index(drop=True), check_dtype=False
-    )
+    kw = dict(metric=metric, probe_id="pid", build_id="bid")
+    # a radius halfway between two adjacent distinct distances, so no pair
+    # sits on the boundary where an ulp of difference would flip it
+    d = match_join(probe, build, radius=1e9, impl="sql", **kw).toPandas()
+    levels = np.unique(d["distance"].round(9))
+    i = (len(levels) - 1) // 2
+    radius = float(levels[i] + levels[i + 1]) / 2
+    impls = ("sql", "numpy", "grouped")
+    for mode in ({"k": 5}, {"radius": radius}):
+        out = {
+            impl: match_join(probe, build, impl=impl, **mode, **kw)
+            .select("pid", "bid", "distance")
+            .orderBy("pid", "bid")
+            .toPandas()
+            for impl in impls
+        }
+        assert len(out["sql"]) > 0
+        for a, b in combinations(impls, 2):
+            pd.testing.assert_frame_equal(out[a], out[b], check_dtype=False)
+    for p in (0.25, 0.9):
+        radii = [
+            percentile_radius(probe, build, p, impl=impl, feature_width=6, **kw)
+            for impl in impls
+        ]
+        assert radii == pytest.approx([radii[0]] * 3, rel=1e-9, abs=1e-12)
 
 
 def test_knn_matches_bruteforce_numpy_oracle(spark):
@@ -78,7 +93,7 @@ def test_knn_matches_bruteforce_numpy_oracle(spark):
     B = np.array([r["features"] for r in build.orderBy("bid").collect()])
     D = np.abs(P[:, None, :] - B[None, :, :]).sum(2)
     out = (
-        knn_join(probe, build, 3, probe_id="pid", build_id="bid")
+        match_join(probe, build, k=3, probe_id="pid", build_id="bid", impl="sql")
         .orderBy("pid", "distance", "bid")
         .toPandas()
     )
@@ -94,10 +109,10 @@ def test_knn_matches_bruteforce_numpy_oracle(spark):
 def test_radius_join_bounds_and_drops_unmatched(spark, impl):
     """reference: nearest_consented_customers.py:153-182 (J3)."""
     probe, build = _frames(spark, seed=5)
-    out = radius_join(probe, build, 3.0, build_id="bid", impl=impl)
+    out = match_join(probe, build, radius=3.0, build_id="bid", impl=impl)
     assert out.filter(F.col("distance") > 3.0).count() == 0
     # radius 0 keeps only exact matches; radius huge keeps all pairs
-    all_pairs = radius_join(probe, build, 1e9, build_id="bid", impl=impl)
+    all_pairs = match_join(probe, build, radius=1e9, build_id="bid", impl=impl)
     assert all_pairs.count() == 7 * 11
 
 
@@ -122,7 +137,9 @@ def test_knn_join_lsh_recall(spark):
     probe, build = _frames(spark, n_probe=30, n_build=40, width=8, seed=9)
     exact = {
         (r["pid"], r["bid"]): r["distance"]
-        for r in knn_join(probe, build, 3, probe_id="pid", build_id="bid").collect()
+        for r in match_join(
+            probe, build, k=3, probe_id="pid", build_id="bid", impl="sql"
+        ).collect()
     }
     approx = {
         (r["pid"], r["bid"]): r["distance"]
@@ -189,8 +206,10 @@ def test_lsh_coarse_grouping_identical(spark):
 
 def test_min_distance_and_percentile_radius(spark):
     probe, build = _frames(spark, seed=7)
-    nearest = min_distance_per_probe(probe, build, probe_id="pid", build_id="bid")
-    nd = {r["pid"]: r["distance_to_nearest_neighbor"] for r in nearest.collect()}
+    nearest = match_join(
+        probe, build, k=1, probe_id="pid", build_id="bid", impl="sql"
+    )
+    nd = {r["pid"]: r["distance"] for r in nearest.collect()}
     # every probe has a nearest distance >= 0
     assert len(nd) == 7 and all(v >= 0 for v in nd.values())
     r95 = percentile_radius(probe, build, 0.95, probe_id="pid", build_id="bid")
@@ -200,9 +219,16 @@ def test_min_distance_and_percentile_radius(spark):
     # percentile coverage invariant (invariant 8, real claim — the reference
     # test compares % to fraction and is vacuous; with linear interpolation
     # the tight guarantee is coverage ≥ p − 1/n):
-    matched = radius_join(probe, build, r95, build_id="bid")
+    matched = match_join(probe, build, radius=r95, build_id="bid", impl="sql")
     frac = matched.select("pid").distinct().count() / 7
     assert frac >= 0.95 - 1.0 / 7 - 1e-9
+    # the LSH pass can miss a true nearest neighbor, which only inflates a
+    # probe's nearest distance: its radius errs toward matching more
+    for p in (0.5, 0.95):
+        assert percentile_radius(
+            probe, build, p, probe_id="pid", build_id="bid", impl="lsh",
+            feature_width=5,
+        ) >= percentile_radius(probe, build, p, probe_id="pid", build_id="bid")
 
 def test_radius_join_lsh_subset_and_recall(spark):
     """Bucketed approximate radius join: every returned pair is a true
@@ -215,8 +241,8 @@ def test_radius_join_lsh_subset_and_recall(spark):
     probe, build = _frames(spark, n_probe=30, n_build=40, width=8, seed=9)
     exact = {
         (r["pid"], r["bid"]): r["distance"]
-        for r in radius_join(
-            probe, build, 6.0, build_id="bid"
+        for r in match_join(
+            probe, build, radius=6.0, build_id="bid", impl="sql"
         ).collect()
     }
     approx = {
@@ -448,25 +474,6 @@ def test_run_adjustment_auto_equals_pinned_exact(spark, tiled_fixture):
     a = sorted(map(tuple, auto.collect()))
     s = sorted(map(tuple, sql.collect()))
     assert a == s
-
-
-def test_auto_n_planes_density_law():
-    """The density helper holds expected candidate mass linear in the
-    data: p grows by ~log2(G) under G-fold growth, clamped to [4, 24]."""
-    from consent_based_conversion_adjustments_spark.operators.similarity_join import (
-        auto_n_planes,
-    )
-
-    p1 = auto_n_planes(2_000, 2_000, n_tables=8)
-    p64 = auto_n_planes(128_000, 128_000, n_tables=8)
-    assert p64 - p1 == 6  # log2(64)
-    # mass at the chosen p stays within the linear budget
-    for n in (2_000, 128_000, 8_192_000):
-        p = auto_n_planes(n, n, n_tables=8)
-        mass = n * n * 8 / 2**p
-        assert mass <= 64 * (2 * n) or p == 24
-    assert auto_n_planes(10, 10) == 4          # floor
-    assert auto_n_planes(10**9, 10**9) <= 24   # ceiling
 
 
 def test_lsh_recall_plan_reproduces_ledger_points():
@@ -725,49 +732,27 @@ def test_grouped_kernel_byte_identical_to_sql(spark, metric):
     """The dictionary kernel must reproduce the sql kernel exactly —
     same pairs, same distances, same (distance, build_id) tie-break —
     on a duplicate-heavy feature space (its production regime)."""
-    from consent_based_conversion_adjustments_spark.operators.similarity_join import (
-        min_distance_per_probe as mindist,
-    )
-
     probe, build = _dup_frames(spark)
-    for k in (1, 3, 7):
+    kw = dict(metric=metric, probe_id="pid", build_id="bid")
+    for mode in [{"k": k} for k in (1, 3, 7)] + [
+        {"radius": r} for r in (0.0, 1.0, 2.5)
+    ]:
         a = (
-            knn_join(probe, build, k, metric=metric, probe_id="pid",
-                     build_id="bid", impl="sql")
+            match_join(probe, build, impl="sql", **mode, **kw)
             .orderBy("pid", "distance", "bid").toPandas()
         )
         b = (
-            knn_join(probe, build, k, metric=metric, probe_id="pid",
-                     build_id="bid", impl="grouped")
+            match_join(probe, build, impl="grouped", **mode, **kw)
             .orderBy("pid", "distance", "bid").toPandas()
         )
         pd.testing.assert_frame_equal(
             a.reset_index(drop=True), b[a.columns].reset_index(drop=True),
             check_dtype=False,
         )
-    for r in (0.0, 1.0, 2.5):
-        a = (
-            radius_join(probe, build, r, metric=metric, build_id="bid",
-                        impl="sql")
-            .orderBy("pid", "distance", "bid").toPandas()
-        )
-        b = (
-            radius_join(probe, build, r, metric=metric, build_id="bid",
-                        impl="grouped")
-            .orderBy("pid", "distance", "bid").toPandas()
-        )
-        pd.testing.assert_frame_equal(
-            a.reset_index(drop=True), b[a.columns].reset_index(drop=True),
-            check_dtype=False,
-        )
-    a = mindist(probe, build, metric=metric, probe_id="pid", build_id="bid",
-                impl="sql").orderBy("pid").toPandas()
-    b = mindist(probe, build, metric=metric, probe_id="pid", build_id="bid",
-                impl="grouped").orderBy("pid").toPandas()
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), b[a.columns].reset_index(drop=True),
-        check_dtype=False,
-    )
+    for p in (0.1, 0.5, 1.0):
+        assert percentile_radius(
+            probe, build, p, impl="sql", **kw
+        ) == percentile_radius(probe, build, p, impl="grouped", **kw)
 
 
 def test_run_adjustment_grouped_equals_sql(spark, tiled_fixture):

@@ -122,44 +122,44 @@ def make_sf1_corpus() -> str:
     import pyarrow.parquet as pq
 
     _link_others(CORPUS_DST, ("documents.parquet", "embeddings.parquet"))
+    doc_path = os.path.join(CORPUS_DST, "documents.parquet")
+    emb_path = os.path.join(CORPUS_DST, "embeddings.parquet")
+    if os.path.exists(doc_path) and os.path.exists(emb_path):
+        return CORPUS_DST
+    # one generator draws the documents, then the embeddings: build both
+    # whenever either is missing, so a rebuild reproduces the fresh build
     rng = np.random.default_rng(CORPUS_SEED)
 
-    doc_path = os.path.join(CORPUS_DST, "documents.parquet")
-    if not os.path.exists(doc_path):
-        df = pq.read_table(os.path.join(SRC, "documents.parquet")).to_pandas()
-        n = len(df) * FACTOR
-        boot = df.iloc[rng.integers(0, len(df), size=n)].reset_index(drop=True)
+    df = pq.read_table(os.path.join(SRC, "documents.parquet")).to_pandas()
+    n = len(df) * FACTOR
+    boot = df.iloc[rng.integers(0, len(df), size=n)].reset_index(drop=True)
 
-        def mutate(text: str) -> str:
-            words = text.split(" ")
-            if len(words) < 4:
-                return text
-            keep = rng.uniform(size=len(words)) >= DROP_RATE
-            keep[0] = True  # never empty a doc
-            return " ".join(w for w, k in zip(words, keep) if k)
+    def mutate(text: str) -> str:
+        words = text.split(" ")
+        if len(words) < 4:
+            return text
+        keep = rng.uniform(size=len(words)) >= DROP_RATE
+        keep[0] = True  # never empty a doc
+        return " ".join(w for w, k in zip(words, keep) if k)
 
-        boot["text"] = [mutate(t) for t in boot["text"]]
-        boot["doc_id"] = np.arange(1, n + 1, dtype="int64")
-        boot["n_chars"] = boot["text"].str.len().astype("int64")
-        pq.write_table(pa.Table.from_pandas(boot, preserve_index=False), doc_path)
-        print(f"wrote {doc_path}: {n} docs (bootstrap x{FACTOR}, "
-              f"{DROP_RATE:.0%} token drop)", file=sys.stderr)
+    boot["text"] = [mutate(t) for t in boot["text"]]
+    boot["doc_id"] = np.arange(1, n + 1, dtype="int64")
+    boot["n_chars"] = boot["text"].str.len().astype("int64")
+    pq.write_table(pa.Table.from_pandas(boot, preserve_index=False), doc_path)
+    print(f"wrote {doc_path}: {n} docs (bootstrap x{FACTOR}, "
+          f"{DROP_RATE:.0%} token drop)", file=sys.stderr)
 
-    # the embeddings draw from the same generator AFTER the documents, so
-    # rebuild both together (delete the directory) to reproduce them
-    emb_path = os.path.join(CORPUS_DST, "embeddings.parquet")
-    if not os.path.exists(emb_path):
-        df = pq.read_table(os.path.join(SRC, "embeddings.parquet")).to_pandas()
-        n = len(df) * FACTOR
-        boot = df.iloc[rng.integers(0, len(df), size=n)].reset_index(drop=True)
-        M = np.array(boot["embedding"].tolist(), dtype="float32")
-        M = M + rng.normal(scale=0.01, size=M.shape).astype("float32")
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
-        boot["embedding"] = list(M)
-        boot["vec_id"] = np.arange(1, n + 1, dtype="int64")
-        pq.write_table(pa.Table.from_pandas(boot, preserve_index=False), emb_path)
-        print(f"wrote {emb_path}: {n} vecs (bootstrap x{FACTOR}, "
-              "jitter+renorm)", file=sys.stderr)
+    df = pq.read_table(os.path.join(SRC, "embeddings.parquet")).to_pandas()
+    n = len(df) * FACTOR
+    boot = df.iloc[rng.integers(0, len(df), size=n)].reset_index(drop=True)
+    M = np.array(boot["embedding"].tolist(), dtype="float32")
+    M = M + rng.normal(scale=0.01, size=M.shape).astype("float32")
+    M = M / np.linalg.norm(M, axis=1, keepdims=True)
+    boot["embedding"] = list(M)
+    boot["vec_id"] = np.arange(1, n + 1, dtype="int64")
+    pq.write_table(pa.Table.from_pandas(boot, preserve_index=False), emb_path)
+    print(f"wrote {emb_path}: {n} vecs (bootstrap x{FACTOR}, "
+          "jitter+renorm)", file=sys.stderr)
     return CORPUS_DST
 
 
