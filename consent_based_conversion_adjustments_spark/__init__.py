@@ -26,7 +26,6 @@ from .pipeline import (
     prepare_pipeline_input,
     run_adjustment,
     run_dates,
-    run_dates_partitioned,
 )
 from .session import get_spark
 
@@ -39,5 +38,4 @@ __all__ = [
     "prepare_pipeline_input",
     "run_adjustment",
     "run_dates",
-    "run_dates_partitioned",
 ]

@@ -37,7 +37,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--number-nearest-neighbors", type=float, default=None)
     p.add_argument("--radius", type=float, default=None)
     p.add_argument("--percentile", type=float, default=None)
-    p.add_argument("--impl", choices=["auto", "sql", "numpy", "lsh"], default="auto")
+    p.add_argument("--impl", choices=["auto", "sql", "numpy", "grouped", "lsh"], default="auto")
     return p
 
 

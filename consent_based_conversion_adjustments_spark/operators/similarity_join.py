@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import AdjustmentConfig
 from ..functions.distance import metric_distance, parse_minkowski
 
 BUILD_FEATURES = "__build_features"
@@ -318,7 +317,9 @@ def match_join(
     anti-join against the output's probe ids. ``k`` may be a proportion of
     the build side (``resolve_k``): the numpy kernel resolves it from the
     matrix it collects anyway; the other routes from ``n_build``, counted
-    when not supplied.
+    when not supplied. The mode is chosen on ``is not None``, fixing the
+    reference's truthiness dispatch (nearest_consented_customers.py:513)
+    so ``radius=0.0`` is a valid empty-match join (FIXTURES.md F5).
     """
     if (k is None) == (radius is None):
         raise ValueError("exactly one of k / radius required")
@@ -518,18 +519,25 @@ def resolve_auto_impl(
     d_probe: int | None = None,
     d_build: int | None = None,
 ) -> tuple[str, int, int]:
-    """The eager half of ``impl="auto"``: count both sides, and — only
-    when the row-level grid already failed the budget — count distinct
-    feature vectors to test the dictionary route. Returns
-    (impl, n_probe, n_build). Distinct counts go through xxhash64 (a
-    64-bit collision could only shrink the COUNT and flip the route,
-    never an answer — every route is exact). All four stats are
-    overridable so a caller that already knows them (the per-date loop's
-    one-pass precount, VERDICT r12 §Next #7) pays zero extra jobs."""
-    if n_probe is None:
-        n_probe = probe.count()
-    if n_build is None:
-        n_build = build.count()
+    """The eager half of ``impl="auto"``: count both sides (one
+    aggregation over their tagged union, so one job), and — only when the
+    row-level grid already failed the budget — count distinct feature
+    vectors to test the dictionary route. Returns (impl, n_probe,
+    n_build). Distinct counts go through xxhash64 (a 64-bit collision
+    could only shrink the COUNT and flip the route, never an answer —
+    every route is exact). All four stats are overridable so a caller
+    that already knows them (the per-date loop's one-pass precount,
+    VERDICT r12 §Next #7) pays zero extra jobs."""
+    if n_probe is None or n_build is None:
+        side = F.col("__is_probe")
+        row = (
+            probe.select(F.lit(True).alias("__is_probe"))
+            .unionByName(build.select(F.lit(False).alias("__is_probe")))
+            .agg(F.count_if(side).alias("p"), F.count_if(~side).alias("b"))
+            .first()
+        )
+        n_probe = row["p"] if n_probe is None else n_probe
+        n_build = row["b"] if n_build is None else n_build
     impl = choose_impl(n_probe, n_build, feature_width)
     if impl == "lsh":
         if d_probe is None:
@@ -545,55 +553,6 @@ def resolve_auto_impl(
             d_probe=d_probe, d_build=d_build,
         )
     return impl, n_probe, n_build
-
-
-def similarity_join(
-    probe: DataFrame,
-    build: DataFrame,
-    config: AdjustmentConfig,
-    *,
-    probe_id: str = "probe_id",
-    build_id: str = "build_id",
-    features: str = "features",
-    impl: str = "auto",
-    n_probe: int | None = None,
-    n_build: int | None = None,
-    feature_width: int | None = None,
-    build_matrix=None,
-) -> DataFrame:
-    """Mode dispatch (J4): exactly one of k / radius / percentile, answered
-    by one ``match_join`` call (a percentile becomes a radius through
-    ``percentile_radius`` on the same route).
-
-    reference: nearest_consented_customers.py:223-264, 470-524. Dispatch is
-    on ``is not None`` — deliberately fixing the reference's truthiness bug
-    (line 513) so ``radius=0.0`` is a valid empty-match join (FIXTURES.md F5).
-
-    ``impl="auto"`` (the default, mirroring the reference's
-    ``algorithm='auto'``) resolves the route via ``resolve_auto_impl`` —
-    two count() jobs when ``n_probe`` / ``n_build`` aren't supplied, then
-    the measured budgets of ``choose_impl`` decide. ``impl="lsh"`` forces
-    the beyond-broadcast route for every mode (kNN / radius / percentile)
-    — neither side is collected or broadcast; requires ``feature_width``.
-    Approximate (recall set by the LSH amplification), intended for build
-    sides past the broadcast limit.
-    """
-    if impl == "auto":
-        impl, n_probe, n_build = resolve_auto_impl(
-            probe, build, features, feature_width, n_probe, n_build
-        )
-    kw = dict(
-        metric=config.metric, probe_id=probe_id, build_id=build_id,
-        features=features, impl=impl, feature_width=feature_width,
-        build_matrix=build_matrix,
-    )
-    radius = config.radius
-    if config.percentile is not None:
-        radius = percentile_radius(probe, build, config.percentile, **kw)
-    return match_join(
-        probe, build, k=config.number_nearest_neighbors, radius=radius,
-        n_build=n_build, **kw,
-    )
 
 
 #: Measured recall-vs-mass ledger from the 64× embeddings rung

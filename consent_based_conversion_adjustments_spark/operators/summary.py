@@ -24,7 +24,9 @@ def summary_statistics(
     the matched-pairs output). Computes everything in one aggregation pass:
     a left-semi-style flag join then conditional aggregation — no per-metric
     jobs like the reference's property cascade
-    (nearest_consented_customers.py:90-138).
+    (nearest_consented_customers.py:90-138). An empty ``noconsent`` gives
+    0 matched conversions and 0.0 matched value, as the reference's pandas
+    sums do, and empty percentages (0/0).
     """
     flagged = noconsent.join(
         matched_probe_ids.select(probe_id).distinct().withColumn(
@@ -46,10 +48,9 @@ def summary_statistics(
             / F.count(F.lit(1))
             * 100.0
         ).alias("percentage_matched_conversions"),
-        F.sum(F.when(matched, 1).otherwise(0))
+        F.coalesce(F.sum(F.when(matched, 1).otherwise(0)), F.lit(0))
         .cast("long")
         .alias("number_matched_conversions"),
-        F.sum(F.when(matched, conv).otherwise(0.0)).alias(
-            "total_matched_conversion_value"
-        ),
+        F.coalesce(F.sum(F.when(matched, conv).otherwise(0.0)), F.lit(0.0))
+        .alias("total_matched_conversion_value"),
     )

@@ -39,9 +39,9 @@ from .operators.preprocess import union_encode_split
 from .operators.similarity_join import (
     _collect_build_matrix,
     adjust_partials_numpy,
+    match_join,
     percentile_radius,
     resolve_auto_impl,
-    similarity_join,
 )
 from .operators.summary import summary_statistics
 from .sources.io import scan_between_dates, write_adjustments_csv
@@ -107,7 +107,7 @@ def run_adjustment(
     """The full per-date adjustment query. Returns lazy DataFrames.
 
     ``impl="auto"`` (default) resolves the physical join strategy ONCE up
-    front via ``choose_impl`` — two count() jobs, then the measured budgets
+    front via ``choose_impl`` — one count job, then the measured budgets
     (a 1e8-pair grid and a 128 MB build matrix, PERF.md rounds 11-12) pick
     the numpy broadcast kernel, the grouped dictionary kernel or the
     beyond-broadcast LSH route. The reference makes the same call inside
@@ -119,6 +119,10 @@ def run_adjustment(
     their plans; the ``bench.py`` board and the other registrations run
     "auto" (the ``*_lsh_*`` registrations call the LSH joins directly).
 
+    An empty consent side raises ``ValueError`` in every mode, as
+    sklearn's ``fit`` does on an empty index; an empty no-consent side
+    adjusts nothing and its summary counts 0 matches.
+
     ``check_id_uniqueness`` runs one eager count-vs-countDistinct pass per
     side and raises if the configured id columns do not key rows uniquely
     (see ``_row_id`` for why duplicates would silently double-count).
@@ -126,7 +130,7 @@ def run_adjustment(
     ``auto_stats``: precomputed ``(n_probe, n_build, d_probe, d_build)``
     for the auto dispatch — the per-date loop supplies them from ONE
     grouped pass over each table (``_per_date_auto_stats``) instead of
-    paying two count jobs (plus two count-distincts past the grid
+    paying a count job (plus two count-distincts past the grid
     budget) per date (VERDICT r12 §Next #7). Routing-only: every stat
     feeds ``choose_impl``; answers do not depend on them on the exact
     routes.
@@ -153,7 +157,7 @@ def run_adjustment(
                     f"{side} side ({row['n']} rows, {row['d']} distinct keys) "
                     "— duplicates would double-count in the scatter-add"
                 )
-    n_probe = n_build = None
+    n_build = None
     if impl == "auto":
         sp, sb, dp, db = auto_stats if auto_stats is not None else (
             None, None, None, None
@@ -172,6 +176,17 @@ def run_adjustment(
         # one eager collect shared by every numpy kernel below (pairs path,
         # percentile pass 1, fused adjust) — the build side is read once
         build_matrix = _collect_build_matrix(build, CONSENT_ID, "features")
+        n_build = len(build_matrix[0])
+    elif n_build is None:
+        n_build = build.count()
+    if n_build == 0:
+        # sklearn's NearestNeighbors.fit raises on an empty index in every
+        # mode (reference: nearest_consented_customers.py:67); fail the
+        # same way before anything downstream runs
+        raise ValueError(
+            "the consent side has no rows — there is no consented customer "
+            "to redistribute the no-consent conversions to"
+        )
     cfg = config
     if config.percentile is not None:
         # resolve the auto-radius once (one eager percentile pass on the
@@ -190,18 +205,11 @@ def run_adjustment(
             build_matrix=build_matrix,
         )
         cfg = dataclasses.replace(config, percentile=None, radius=r)
-    pairs = similarity_join(
-        probe,
-        build,
-        cfg,
-        probe_id=PROBE_ID,
-        build_id=CONSENT_ID,
-        features="features",
-        impl=impl,
-        n_probe=n_probe,
-        n_build=n_build,
-        feature_width=encoder.width,
-        build_matrix=build_matrix,
+    pairs = match_join(
+        probe, build, k=cfg.number_nearest_neighbors, radius=cfg.radius,
+        impl=impl, metric=cfg.metric, probe_id=PROBE_ID, build_id=CONSENT_ID,
+        features="features", feature_width=encoder.width,
+        build_matrix=build_matrix, n_build=n_build,
     )
     # the pairs feed three consumers (scatter-add aggs, naive-baseline
     # scalar, summary) — persist so the join runs once; m·k rows, spillable
@@ -242,8 +250,6 @@ def run_adjustment(
             .select("__pcid", "__cnt", "__convsum")
         )
         if cfg.number_nearest_neighbors is not None:
-            if n_build is None:
-                n_build = build.count()
             k = resolve_k(cfg.number_nearest_neighbors, n_build)
             cls_pairs = knn_topk_classes(
                 probe, build, k, metric=cfg.metric, build_id=CONSENT_ID,
@@ -413,8 +419,12 @@ def _adjust_dates(
         end = _next_day(date)
         c = scan_between_dates(consent, config.date_column, date, end)
         nc = scan_between_dates(noconsent, config.date_column, date, end)
-        yield date, run_adjustment(c, nc, config, impl=impl,
-                                   auto_stats=stats.get(date))
+        try:
+            result = run_adjustment(c, nc, config, impl=impl,
+                                    auto_stats=stats.get(date))
+        except ValueError as err:
+            raise ValueError(f"{date}: {err}") from err
+        yield date, result
 
 
 def run_dates(
@@ -481,23 +491,6 @@ def prepare_pipeline_input(
     return dates
 
 
-def _dated_union(
-    consent: DataFrame,
-    noconsent: DataFrame,
-    config: AdjustmentConfig,
-    dates: list[str],
-    impl: str,
-) -> tuple[DataFrame, list[AdjustmentResult]]:
-    """``run_dates_collected``'s frame plus the per-date results that own
-    its cached intermediates (release them once the frame is written)."""
-    out, results = None, []
-    for date, result in _adjust_dates(consent, noconsent, config, dates, impl):
-        dated = result.data_adjusted.withColumn("date", F.lit(date))
-        out = dated if out is None else out.unionByName(dated)
-        results.append(result)
-    return out, results
-
-
 def run_dates_collected(
     consent: DataFrame,
     noconsent: DataFrame,
@@ -507,29 +500,17 @@ def run_dates_collected(
     impl: str = "auto",
 ) -> DataFrame:
     """The O1-O2 date loop without a sink: one independent distributed
-    adjustment per date, unioned with a ``date`` literal column.
-    This is the frame ``run_dates_partitioned`` writes; returning it lazily
-    lets callers pick their own sink or feed it to further queries. The
-    per-date intermediates it reads stay cached until the caller clears the
-    cache (``spark.catalog.clearCache()``)."""
-    return _dated_union(consent, noconsent, config, dates, impl)[0]
-
-
-def _write_dates_batch(out: DataFrame, output_path: str) -> None:
-    """The micro-batch sink of `run_dates_streaming`, factored out so the
-    restart test can inject a crash between the write and the checkpoint
-    commit. DYNAMIC partition overwrite (scoped to this writer, not the
-    session) is what makes the foreachBatch replay idempotent: only the
-    ``date=<d>`` partitions present in this batch's frame are replaced,
-    every other date's output is untouched — so a batch that is re-run
-    after a mid-commit crash rewrites its own partitions to the identical
-    deterministic result instead of appending duplicates."""
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date")
-        .parquet(output_path)
-    )
+    adjustment per date, unioned with a ``date`` literal column. Returning
+    it lazily lets callers pick their own sink or feed it to further
+    queries. Each date's cached intermediates are released before it
+    returns, so consuming the frame recomputes the per-date plans and
+    leaves nothing cached."""
+    out = None
+    for date, result in _adjust_dates(consent, noconsent, config, dates, impl):
+        dated = result.data_adjusted.withColumn("date", F.lit(date))
+        out = dated if out is None else out.unionByName(dated)
+        result.release()
+    return out
 
 
 def run_dates_streaming(
@@ -557,21 +538,19 @@ def run_dates_streaming(
     pipeline.py:318-360 (the batch loop). The loop body runs inside
     ``foreachBatch``: the micro-batch is collected (a dates file is a
     handful of date strings by construction — the collect is bounded by
-    lookback_days, never by data), then each date runs as the same
-    independent distributed job the batch loop uses, landing in
-    ``date=<d>`` parquet partitions.
+    lookback_days, never by data), then ``run_dates`` runs those dates and
+    writes the same ``<output_path>/<date>/adjustments_{data,summary}``
+    layout as the batch loop.
 
     End-to-end semantics: the file-source checkpoint makes batch REPLAY
     at-least-once (a crash after the sink write but before the commit
-    re-runs the micro-batch on restart); the sink (`_write_dates_batch`)
-    turns that into effectively-exactly-once by DYNAMIC partition
-    overwrite — a replayed batch deterministically rewrites exactly its
-    own ``date=<d>`` partitions rather than appending to them. The same
-    property gives re-adjustment the batch pipeline's semantics: a later
-    dates file containing an already-processed date supersedes that
-    date's output (latest run wins), matching the reference's
-    per-date-overwrite contract (reference pipeline.py:292-295 writes a
-    fixed per-date object path, so re-runs replace).
+    re-runs the micro-batch on restart). ``run_dates`` writes each date's
+    directories with ``mode("overwrite")``, so a replayed batch rewrites
+    them to the identical deterministic result instead of appending, and
+    a later dates file containing an already-processed date supersedes
+    that date's output (latest run wins) — the reference's per-date
+    overwrite contract (reference pipeline.py:292-295 writes a fixed
+    per-date object path, so re-runs replace).
     """
     if config.date_column is None:
         raise ValueError("run_dates_streaming requires config.date_column")
@@ -581,12 +560,11 @@ def run_dates_streaming(
         dates = sorted(
             {r["value"].strip() for r in batch_df.collect() if r["value"].strip()}
         )
-        if not dates:
-            return
-        out, results = _dated_union(consent, noconsent, config, dates, impl)
-        _write_dates_batch(out, output_path)
-        for result in results:
-            result.release()
+        if dates:
+            run_dates(
+                spark, consent, noconsent, config, dates, output_path,
+                impl=impl,
+            )
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -594,24 +572,3 @@ def run_dates_streaming(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def run_dates_partitioned(
-    spark: SparkSession,
-    consent: DataFrame,
-    noconsent: DataFrame,
-    config: AdjustmentConfig,
-    dates: list[str],
-    output_path: str,
-    *,
-    impl: str = "auto",
-) -> None:
-    """Scale variant of the O3 sink: results of the per-date loop accumulate
-    into a single ``partitionBy(date)`` dataset so downstream consumers get
-    partition pruning instead of a directory-per-date convention."""
-    out, results = _dated_union(consent, noconsent, config, dates, impl)
-    out.write.mode("overwrite").partitionBy("date").option(
-        "header", True
-    ).csv(f"{output_path}/adjustments_data_partitioned")
-    for result in results:
-        result.release()

@@ -8,8 +8,9 @@ near-dup relations, each partitioned by ``admit_batch_id``), and each
 arriving micro-batch runs one admission round against every EARLIER
 epoch's partitions, then appends exactly its own delta.
 
-Exactly-once contract (the same mechanism as the O5 dates sink,
-`pipeline.run_dates_streaming`): the stream checkpoint makes micro-batch
+Exactly-once contract (the O5 dates stream, `pipeline.run_dates_streaming`,
+relies on the same replay; it overwrites per-date directories instead of
+partitions): the stream checkpoint makes micro-batch
 replay at-least-once — a crash after the sink writes but before the
 commit re-runs the batch with the SAME epoch id. The sink turns that
 into effectively-exactly-once by

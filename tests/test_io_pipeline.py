@@ -78,15 +78,26 @@ def test_run_dates_writes_per_date_csvs(spark, tmp_path):
         assert "percentage_matched_conversion_value" in summary
 
 
+def _no_cached_rdds(sc):
+    return sc._jsc.getPersistentRDDs().size() == 0
+
+
 @pytest.mark.parametrize("impl", ["numpy", "grouped"])
 @pytest.mark.parametrize(
     "mode", [{"number_nearest_neighbors": 1}, {"radius": 1.0}]
 )
 def test_run_dates_releases_every_persisted_frame(spark, tmp_path, impl, mode):
     """Each date's AdjustmentResult owns what run_adjustment persisted
-    (pairs, plus partials on numpy or the class frames on grouped);
-    run_dates releases it after the date's write, so a multi-date run
-    leaves no cached RDD behind."""
+    (pairs, plus partials on numpy or the class frames on grouped). Every
+    per-date entry point releases it: run_dates after the date's write,
+    run_dates_collected before it returns (consuming its frame caches
+    nothing), and the streaming trigger through run_dates — so none
+    leaves a cached RDD behind."""
+    from consent_based_conversion_adjustments_spark.pipeline import (
+        run_dates_collected,
+        run_dates_streaming,
+    )
+
     rows = []
     for d, day in [("2021-11-20", 1), ("2021-11-21", 2)]:
         for i in range(6):
@@ -103,20 +114,98 @@ def test_run_dates_releases_every_persisted_frame(spark, tmp_path, impl, mode):
         date_column="conversion_date",
         **mode,
     )
+    consent = df.filter("consented").drop("consented")
+    noconsent = df.filter("not consented").drop("consented")
+    dates = ["2021-11-20", "2021-11-21"]
     sc = spark.sparkContext
     spark.catalog.clearCache()
     for rdd in list(sc._jsc.getPersistentRDDs().values()):
         rdd.unpersist(True)
     run_dates(
-        spark,
-        df.filter("consented").drop("consented"),
-        df.filter("not consented").drop("consented"),
-        cfg,
-        ["2021-11-20", "2021-11-21"],
-        str(tmp_path / "out"),
-        impl=impl,
+        spark, consent, noconsent, cfg, dates, str(tmp_path / "out"), impl=impl
     )
-    assert sc._jsc.getPersistentRDDs().size() == 0
+    assert _no_cached_rdds(sc)
+
+    collected = run_dates_collected(consent, noconsent, cfg, dates, impl=impl)
+    assert collected.count() == 6
+    assert _no_cached_rdds(sc)
+
+    dates_dir = tmp_path / "dates"
+    dates_dir.mkdir()
+    (dates_dir / "batch1.txt").write_text(dates[0] + "\n")
+    q = run_dates_streaming(
+        spark, consent, noconsent, cfg, str(dates_dir),
+        str(tmp_path / "streamed"), str(tmp_path / "ckpt"), impl=impl,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _no_cached_rdds(sc)
+
+
+@pytest.mark.parametrize("impl", ["auto", "numpy", "sql"])
+@pytest.mark.parametrize(
+    "mode",
+    [{"number_nearest_neighbors": 1}, {"radius": 1.0}, {"percentile": 0.5}],
+)
+def test_empty_consent_side_raises_naming_the_date(spark, tmp_path, impl, mode):
+    """A date with no consented rows fails the same way in every mode
+    (sklearn's fit raises on an empty index): a ValueError naming the date
+    and the side, raised before anything is written for that date. The
+    three impls cover the three ways the build size is known: the auto
+    count, the collected numpy matrix, a count on the other routes."""
+    rows = [("g0", "2021-11-20", 10.0, "dress", True),
+            ("g1", "2021-11-21", 5.0, "shoe", False)]
+    df = spark.createDataFrame(
+        rows, ["gclid", "conversion_date", "conversion_value", "item", "consented"]
+    )
+    cfg = AdjustmentConfig(
+        conversion_column="conversion_value",
+        id_columns=["gclid"],
+        date_column="conversion_date",
+        **mode,
+    )
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="2021-11-21: the consent side has no rows"):
+        run_dates(
+            spark,
+            df.filter("consented").drop("consented"),
+            df.filter("not consented").drop("consented"),
+            cfg,
+            ["2021-11-21"],
+            str(out),
+            impl=impl,
+        )
+    assert not out.exists()
+
+
+def test_empty_noconsent_side_summarizes_zero_matches(spark, tmp_path):
+    """A date with no non-consented rows adjusts nothing: its summary
+    counts 0 matched conversions worth 0.0 (the reference's pandas sums),
+    and its two percentages are empty (0/0)."""
+    rows = [(f"g{i}", "2021-11-20", 10.0 * (i + 1), "dress") for i in range(3)]
+    consent = spark.createDataFrame(
+        rows, ["gclid", "conversion_date", "conversion_value", "item"]
+    )
+    noconsent = consent.limit(0)
+    cfg = AdjustmentConfig(
+        conversion_column="conversion_value",
+        id_columns=["gclid"],
+        date_column="conversion_date",
+        number_nearest_neighbors=1,
+    )
+    out = str(tmp_path / "out")
+    run_dates(spark, consent, noconsent, cfg, ["2021-11-20"], out)
+    (summary_file,) = glob.glob(f"{out}/2021-11-20/adjustments_summary/*.csv")
+    header, row = open(summary_file).read().splitlines()
+    summary = dict(zip(header.split(","), row.split(",")))
+    assert summary == {
+        "percentage_matched_conversion_value": "",
+        "percentage_matched_conversions": "",
+        "number_matched_conversions": "0",
+        "total_matched_conversion_value": "0.0",
+    }
+    (data_file,) = glob.glob(f"{out}/2021-11-20/adjustments_data/*.csv")
+    assert len(open(data_file).read().splitlines()) == 1 + 3
 
 
 def test_per_date_auto_stats_matches_in_loop_counts(spark):
@@ -161,45 +250,6 @@ def test_per_date_auto_stats_matches_in_loop_counts(spark):
         # items among survivors: probe i∈{1,3} → dress,dress → 1 distinct;
         # build i∈{0,2} → shoe,shoe → 1 distinct
         assert (dp, db) == (1, 1)
-
-
-def test_run_dates_partitioned_layout(spark, tmp_path):
-    from consent_based_conversion_adjustments_spark.pipeline import (
-        run_dates_partitioned,
-    )
-    from consent_based_conversion_adjustments_spark.sources.io import read_csv
-
-    rows = []
-    for d, day in [("2021-11-20", 1), ("2021-11-21", 2)]:
-        for i in range(4):
-            rows.append((f"g{day}{i}", d, 10.0 * (i + 1), i % 2 == 0))
-    df = spark.createDataFrame(
-        rows, ["gclid", "conversion_date", "conversion_value", "consented"]
-    )
-    cfg = AdjustmentConfig(
-        conversion_column="conversion_value",
-        id_columns=["gclid"],
-        date_column="conversion_date",
-        number_nearest_neighbors=1,
-    )
-    out = str(tmp_path / "p")
-    run_dates_partitioned(
-        spark,
-        df.filter("consented").drop("consented"),
-        df.filter("not consented").drop("consented"),
-        cfg,
-        ["2021-11-20", "2021-11-21"],
-        out,
-    )
-    back = read_csv(spark, f"{out}/adjustments_data_partitioned")
-    assert sorted(
-        str(r["date"]) for r in back.select("date").distinct().collect()
-    ) == ["2021-11-20", "2021-11-21"]
-    # partition pruning reaches the scan
-    pruned = back.filter(F.col("date") == "2021-11-20")
-    assert pruned.count() == 2
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
 
 
 def test_prepare_pipeline_input_trigger_parity(spark, tmp_path):

@@ -276,6 +276,27 @@ def test_cli_arg_surface(tmp_path, spark):
     assert glob.glob(f"{out}/2021-11-20/adjustments_summary/*.csv")
 
 
+def test_cli_impl_offers_every_route():
+    """``--impl`` accepts ``auto`` and each route ``run_adjustment`` can
+    pin, including ``grouped`` (which ``auto`` picks on low-cardinality
+    days past the pair-grid budget)."""
+    from consent_based_conversion_adjustments_spark.__main__ import (
+        build_parser,
+    )
+
+    required = [
+        "--consent-path", "c", "--noconsent-path", "nc", "--output-path", "o",
+        "--conversion-column", "v", "--id-columns", "id",
+        "--date-column", "d", "--dates", "2021-11-20",
+    ]
+    parser = build_parser()
+    for impl in ("auto", "sql", "numpy", "grouped", "lsh"):
+        assert parser.parse_args(required + ["--impl", impl]).impl == impl
+    assert parser.parse_args(required).impl == "auto"
+    with pytest.raises(SystemExit):
+        parser.parse_args(required + ["--impl", "cartesian"])
+
+
 def test_multimodal_pipeline_plumbing(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     media = attach_payloads(docs, "text", "doc_id")

@@ -312,48 +312,32 @@ def test_radius_lsh_adjust_conservation(spark):
 def test_similarity_join_lsh_dispatch(spark):
     """impl='lsh' drives all three modes without collecting either side and
     re-attaches probe payload columns."""
-    from consent_based_conversion_adjustments_spark.config import (
-        AdjustmentConfig,
-    )
     from consent_based_conversion_adjustments_spark.operators.similarity_join import (
-        similarity_join,
+        match_join,
+        percentile_radius,
     )
 
     probe, build = _frames(spark, n_probe=20, n_build=25, width=8, seed=7)
     probe = probe.withColumn("payload", F.col("pid") * 10)
+    kw = dict(probe_id="pid", build_id="bid", impl="lsh")
 
-    def cfg(**mode):
-        return AdjustmentConfig(
-            conversion_column="payload", id_columns=["pid"], **mode
-        )
-
-    knn = similarity_join(
-        probe, build, cfg(number_nearest_neighbors=3),
-        probe_id="pid", build_id="bid", impl="lsh", feature_width=8,
-    )
+    knn = match_join(probe, build, k=3, feature_width=8, **kw)
     assert set(knn.columns) >= {"pid", "bid", "distance", "payload"}
     per_probe = knn.groupBy("pid").count().agg(F.max("count")).first()[0]
     assert per_probe <= 3
 
-    rad = similarity_join(
-        probe, build, cfg(radius=5.0),
-        probe_id="pid", build_id="bid", impl="lsh", feature_width=8,
-    )
+    rad = match_join(probe, build, radius=5.0, feature_width=8, **kw)
     assert rad.filter(F.col("distance") > 5.0).count() == 0
     assert "payload" in rad.columns
 
-    pct = similarity_join(
-        probe, build, cfg(percentile=0.5),
-        probe_id="pid", build_id="bid", impl="lsh", feature_width=8,
-    )
+    # percentile mode: the p50 nearest-distance radius, then a radius join
+    r = percentile_radius(probe, build, 0.5, feature_width=8, **kw)
+    pct = match_join(probe, build, radius=r, feature_width=8, **kw)
     # at least ~half the probes should match within the p50 nearest radius
     assert pct.select("pid").distinct().count() >= 8
 
     with pytest.raises(ValueError, match="feature_width"):
-        similarity_join(
-            probe, build, cfg(radius=1.0),
-            probe_id="pid", build_id="bid", impl="lsh",
-        )
+        match_join(probe, build, radius=1.0, **kw)
 
 
 def test_choose_impl_measured_crossover():
@@ -389,21 +373,23 @@ def test_choose_impl_measured_crossover():
 
 
 def test_similarity_join_auto_routes_by_scale(spark):
-    """impl='auto' (the default) picks the physical plan from the actual
-    side counts: a >30k-row probe side produces the LSH co-group plan
-    (FlatMapCoGroupsInPandas), a small one the broadcast/numpy kernel
-    (MapInPandas) — the reference's algorithm='auto' made distributed."""
-    from consent_based_conversion_adjustments_spark.config import (
-        AdjustmentConfig,
-    )
+    """impl='auto' picks the physical plan from the actual side counts
+    (``resolve_auto_impl``, then ``match_join`` on the chosen route — the
+    two steps ``run_adjustment`` takes): a >30k-row probe side produces the
+    LSH co-group plan (FlatMapCoGroupsInPandas), a small one the
+    broadcast/numpy kernel (MapInPandas) — the reference's
+    algorithm='auto' made distributed."""
     from consent_based_conversion_adjustments_spark.operators.similarity_join import (
-        similarity_join,
+        match_join,
+        resolve_auto_impl,
     )
 
-    cfg = AdjustmentConfig(
-        conversion_column="conv", id_columns=["pid"],
-        number_nearest_neighbors=3,
-    )
+    def auto_knn(probe, build):
+        impl, _, n_build = resolve_auto_impl(probe, build, "features", 2)
+        return match_join(
+            probe, build, k=3, impl=impl, probe_id="pid", build_id="bid",
+            feature_width=2, n_build=n_build,
+        )
 
     def side_of(n, idcol, conv, cardinality=None):
         # cardinality=None -> every row a distinct vector (id-scaled);
@@ -421,29 +407,21 @@ def test_similarity_join_auto_routes_by_scale(spark):
 
     # 40k x 5k = 2e8 pairs > the 1e8 grid budget, every vector distinct
     # -> the dictionary grid is also infeasible -> LSH co-group plan
-    big = similarity_join(
-        side_of(40_000, "pid", 1.0), side_of(5_000, "bid", 0.0), cfg,
-        probe_id="pid", build_id="bid", feature_width=2,
-    )
+    big = auto_knn(side_of(40_000, "pid", 1.0), side_of(5_000, "bid", 0.0))
     assert "FlatMapCoGroupsInPandas" in big._jdf.queryExecution().toString()
 
     # same row counts but ~10 distinct vectors per side -> the exact
     # dictionary kernel: pure Catalyst, no Python kernel of either kind
-    grouped = similarity_join(
+    grouped = auto_knn(
         side_of(40_000, "pid", 1.0, cardinality=10),
-        side_of(5_000, "bid", 0.0, cardinality=10), cfg,
-        probe_id="pid", build_id="bid", feature_width=2,
+        side_of(5_000, "bid", 0.0, cardinality=10),
     )
     gplan = grouped._jdf.queryExecution().toString()
     assert "FlatMapCoGroupsInPandas" not in gplan
     assert "MapInPandas" not in gplan
     assert grouped.groupBy("pid").count().agg(F.min("count")).first()[0] == 3
 
-    build = side_of(50, "bid", 0.0)
-    small = similarity_join(
-        side_of(100, "pid", 1.0), build, cfg,
-        probe_id="pid", build_id="bid", feature_width=2,
-    )
+    small = auto_knn(side_of(100, "pid", 1.0), side_of(50, "bid", 0.0))
     plan = small._jdf.queryExecution().toString()
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "MapInPandas" in plan  # the numpy broadcast kernel

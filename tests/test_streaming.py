@@ -298,25 +298,14 @@ def test_stream_stream_time_bounded_join(spark, tmp_path):
     assert [r["user_id"] for r in rows] == [1]
 
 
-def test_streaming_date_trigger_incremental(spark, tmp_path):
-    """O5 trigger path as Structured Streaming: dates.txt files land as a
-    file-source stream; each fires the per-date adjustment over exactly
-    the new dates. Assertions: (1) stream output ≡ the batch date loop for
-    the same dates, (2) a second dates file processes ONLY the new date
-    (checkpointed file-source progress — the first file is not re-run)."""
-    import pyspark.sql.functions as F
-
+def _two_day_customers(spark):
+    """Customers split over two derived days (c_custkey % 2), one in five
+    without consent, adjusted by kNN k=3."""
     from consent_based_conversion_adjustments_spark.config import (
         AdjustmentConfig,
     )
-    from consent_based_conversion_adjustments_spark.pipeline import (
-        run_dates_collected,
-        run_dates_streaming,
-    )
 
-    customer = spark.read.parquet(
-        "/root/testdata/sf0.001/customer.parquet"
-    ).select(
+    customer = spark.read.parquet(f"{SF}/customer.parquet").select(
         "c_custkey",
         F.col("c_acctbal").cast("double").alias("c_acctbal"),
         "c_mktsegment",
@@ -334,12 +323,40 @@ def test_streaming_date_trigger_incremental(spark, tmp_path):
         number_nearest_neighbors=3,
         date_column="event_date",
     )
+    return consent, noconsent, cfg
 
+
+def _dated_csv(base, date, kind="data"):
+    """(header, sorted rows) of the one part file ``run_dates`` writes for
+    ``date`` under ``<base>/<date>/adjustments_<kind>``."""
+    import glob
+
+    (path,) = glob.glob(f"{base}/{date}/adjustments_{kind}/*.csv")
+    header, *rows = open(path).read().splitlines()
+    return header, sorted(rows)
+
+
+def test_streaming_date_trigger_incremental(spark, tmp_path):
+    """O5 trigger path as Structured Streaming: dates.txt files land as a
+    file-source stream; each micro-batch runs ``run_dates`` over exactly
+    the new dates. Assertions: (1) the stream writes the batch loop's
+    per-date layout, data and summary CSVs with the same rows as
+    ``run_dates`` over the same dates, (2) a second dates file processes
+    ONLY the new date (checkpointed file-source progress — the first
+    date's files are not rewritten)."""
+    import glob
+    import os
+
+    from consent_based_conversion_adjustments_spark.pipeline import (
+        run_dates,
+        run_dates_streaming,
+    )
+
+    consent, noconsent, cfg = _two_day_customers(spark)
+    dates = ["1996-01-01", "1996-01-02"]
     dates_dir = str(tmp_path / "dates")
     out_dir = str(tmp_path / "adjusted")
     ckpt = str(tmp_path / "ckpt")
-    import os
-
     os.makedirs(dates_dir, exist_ok=True)
     with open(f"{dates_dir}/batch1.txt", "w") as f:
         f.write("1996-01-01\n")
@@ -348,14 +365,9 @@ def test_streaming_date_trigger_incremental(spark, tmp_path):
         spark, consent, noconsent, cfg, dates_dir, out_dir, ckpt
     )
     q.awaitTermination(120)
-
-    got1 = spark.read.parquet(out_dir)
-    want1 = run_dates_collected(consent, noconsent, cfg, ["1996-01-01"])
-    assert got1.count() == want1.count() > 0
-    # the partition column is read back type-inferred as a date
-    assert {str(r["date"]) for r in got1.select("date").distinct().collect()} == {
-        "1996-01-01"
-    }
+    assert os.listdir(out_dir) == ["1996-01-01"]
+    first_files = sorted(glob.glob(f"{out_dir}/1996-01-01/*/*.csv"))
+    assert len(first_files) == 2  # adjustments_data + adjustments_summary
 
     # second trigger: a new dates file with the next day — only it runs
     with open(f"{dates_dir}/batch2.txt", "w") as f:
@@ -364,27 +376,18 @@ def test_streaming_date_trigger_incremental(spark, tmp_path):
         spark, consent, noconsent, cfg, dates_dir, out_dir, ckpt
     )
     q2.awaitTermination(120)
+    assert sorted(os.listdir(out_dir)) == dates
+    # each write names its part files by a fresh job id, so unchanged
+    # names mean date 1 was not written again
+    assert sorted(glob.glob(f"{out_dir}/1996-01-01/*/*.csv")) == first_files
 
-    got2 = spark.read.parquet(out_dir)
-    want_both = run_dates_collected(
-        consent, noconsent, cfg, ["1996-01-01", "1996-01-02"]
-    )
-    assert got2.count() == want_both.count()
-    # exactly-once: date-1 rows were NOT appended again by the second run
-    per_date = {
-        str(r["date"]): r["count"]
-        for r in got2.groupBy("date").count().collect()
-    }
-    assert per_date == {
-        str(r["date"]): r["count"]
-        for r in want_both.groupBy("date").count().collect()
-    }
-    # value-level parity on a stable projection
-    g = {(str(r["date"]), r["c_custkey"]): round(r["adjusted_conversion"], 6)
-         for r in got2.collect()}
-    w = {(str(r["date"]), r["c_custkey"]): round(r["adjusted_conversion"], 6)
-         for r in want_both.collect()}
-    assert g == w
+    batch_dir = str(tmp_path / "batch")
+    run_dates(spark, consent, noconsent, cfg, dates, batch_dir)
+    for date in dates:
+        for kind in ("data", "summary"):
+            got = _dated_csv(out_dir, date, kind)
+            assert got == _dated_csv(batch_dir, date, kind)
+            assert got[1]
 
 
 def test_streaming_midbatch_failure_idempotent_restart(
@@ -392,38 +395,15 @@ def test_streaming_midbatch_failure_idempotent_restart(
 ):
     """foreachBatch is at-least-once: a crash AFTER the sink write but
     BEFORE the checkpoint commit re-runs the whole micro-batch on restart.
-    The sink must therefore be an idempotent (dynamic-partition-overwrite)
-    write, not a blind append. This test injects exactly that crash and
-    asserts the replayed batch does not duplicate any date partition."""
+    ``run_dates`` overwrites each date's directories, so the replay must
+    rewrite them rather than append. This test injects exactly that crash
+    and asserts the replayed batch does not duplicate any date's rows."""
     import os
 
-    import pyspark.sql.functions as F
-
     from consent_based_conversion_adjustments_spark import pipeline
-    from consent_based_conversion_adjustments_spark.config import (
-        AdjustmentConfig,
-    )
 
-    customer = spark.read.parquet(
-        "/root/testdata/sf0.001/customer.parquet"
-    ).select(
-        "c_custkey",
-        F.col("c_acctbal").cast("double").alias("c_acctbal"),
-        "c_mktsegment",
-        F.col("c_nationkey").cast("string").alias("c_nation_cat"),
-        F.date_add(
-            F.lit("1996-01-01").cast("date"),
-            (F.col("c_custkey") % 2).cast("int"),
-        ).alias("event_date"),
-    )
-    consent = customer.filter(F.col("c_custkey") % 5 != 0)
-    noconsent = customer.filter(F.col("c_custkey") % 5 == 0)
-    cfg = AdjustmentConfig(
-        conversion_column="c_acctbal",
-        id_columns=["c_custkey"],
-        number_nearest_neighbors=3,
-        date_column="event_date",
-    )
+    consent, noconsent, cfg = _two_day_customers(spark)
+    dates = ["1996-01-01", "1996-01-02"]
     dates_dir = str(tmp_path / "dates")
     out_dir = str(tmp_path / "adjusted")
     ckpt = str(tmp_path / "ckpt")
@@ -431,53 +411,59 @@ def test_streaming_midbatch_failure_idempotent_restart(
     with open(f"{dates_dir}/batch1.txt", "w") as f:
         f.write("1996-01-01\n1996-01-02\n")
 
-    real_write = pipeline._write_dates_batch
-    calls = []
+    real_write = pipeline.write_adjustments_csv
+    written = []
 
-    def crash_after_write(out, output_path):
-        real_write(out, output_path)  # the sink write COMPLETES...
-        calls.append("crashed")
-        raise RuntimeError("injected crash before checkpoint commit")
+    def crash_after_last_write(data, summary, base, date):
+        real_write(data, summary, base, date)  # the sink write COMPLETES...
+        written.append(date)
+        if len(written) == len(dates):
+            raise RuntimeError("injected crash before checkpoint commit")
 
-    monkeypatch.setattr(pipeline, "_write_dates_batch", crash_after_write)
+    monkeypatch.setattr(pipeline, "write_adjustments_csv", crash_after_last_write)
     q = pipeline.run_dates_streaming(
         spark, consent, noconsent, cfg, dates_dir, out_dir, ckpt
     )
     with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination(120)
-    assert calls == ["crashed"]
-    # the data landed (the crash was after the write) but the batch is
-    # uncommitted — both partitions exist on disk already
-    first = spark.read.parquet(out_dir)
-    first_counts = {
-        str(r["date"]): r["count"]
-        for r in first.groupBy("date").count().collect()
-    }
-    assert set(first_counts) == {"1996-01-01", "1996-01-02"}
+    # the data landed (the crash was after the writes) but the batch is
+    # uncommitted — both dates exist on disk already
+    assert written == dates
+    first = {d: _dated_csv(out_dir, d) for d in dates}
 
     # recovery: same checkpoint, healthy sink — the micro-batch REPLAYS
-    monkeypatch.setattr(pipeline, "_write_dates_batch", real_write)
+    replayed = []
+
+    def record_write(data, summary, base, date):
+        real_write(data, summary, base, date)
+        replayed.append(date)
+
+    monkeypatch.setattr(pipeline, "write_adjustments_csv", record_write)
     q2 = pipeline.run_dates_streaming(
         spark, consent, noconsent, cfg, dates_dir, out_dir, ckpt
     )
     q2.awaitTermination(120)
+    assert replayed == dates
 
-    got = spark.read.parquet(out_dir)
-    want = pipeline.run_dates_collected(
-        consent, noconsent, cfg, ["1996-01-01", "1996-01-02"]
-    )
-    per_date = {
-        str(r["date"]): r["count"]
-        for r in got.groupBy("date").count().collect()
-    }
+    want = pipeline.run_dates_collected(consent, noconsent, cfg, dates)
     want_per_date = {
         str(r["date"]): r["count"]
         for r in want.groupBy("date").count().collect()
     }
-    # no duplication: the replay overwrote its own partitions
-    assert per_date == want_per_date == first_counts
-    g = {(str(r["date"]), r["c_custkey"]): round(r["adjusted_conversion"], 6)
-         for r in got.collect()}
+    # no duplication: each date still has one part file (``_dated_csv``
+    # unpacks exactly one) holding the batch loop's row count, identical
+    # to what the crashed run wrote
+    for d in dates:
+        assert _dated_csv(out_dir, d) == first[d]
+        assert len(first[d][1]) == want_per_date[d]
+    g = {
+        (d, r["c_custkey"]): round(r["adjusted_conversion"], 6)
+        for d in dates
+        for r in spark.read.option("header", True)
+        .option("inferSchema", True)
+        .csv(f"{out_dir}/{d}/adjustments_data")
+        .collect()
+    }
     w = {(str(r["date"]), r["c_custkey"]): round(r["adjusted_conversion"], 6)
          for r in want.collect()}
     assert g == w
