@@ -10,9 +10,6 @@ is genuinely non-SQL-expressible (those run rows-only).
 
 from __future__ import annotations
 
-import glob
-import json
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,7 +18,6 @@ from consent_based_conversion_adjustments_spark.plans import (
     cocoa_queries,
     corpus_queries,
     data_queries,
-    provenance,
     relational,
 )
 
@@ -40,144 +36,25 @@ def entry(spark: SparkSession) -> DataFrame:
     return cocoa_queries.knn_adjust(spark, SF0001)
 
 
-def _last_verified_round(record_dir: str | None = None) -> dict[str, int]:
-    """Map query name -> most recent round whose CORRECTNESS file recorded
-    a PASS (failures re-sort to the front; rows-only ``no_oracle`` records
-    count — they are the strongest check those queries support)."""
-    here = record_dir or os.path.dirname(os.path.abspath(__file__))
-    return provenance.last_green_rounds(here)
-
-
-def _ordered_names(record_dir: str | None = None) -> list[str]:
-    """CODE-AWARE verification rotation (VERDICT r10 §Next #2).
-
-    The driver only records the first N registry entries per round; this
-    ordering decides which N. Round 10 showed that sorting purely by
-    least-recently-verified round leaves just-rewritten operators LAST —
-    the riskiest queries were the least likely to re-verify. Tiers:
-
-    0. HOT — the query's def-level source fingerprint
-       (plans/provenance.py) differs from its value at the last record
-       tree (edited THIS round), or its closure churned between the two
-       most recent record trees without a green row since. Newest last
-       green first (the r10 failure mode: greened on old code, operator
-       rewritten immediately after).
-    1. NEVER VERIFIED — new registrations need their first driver row.
-    2. STALE-CHANGED — fingerprint differs from the one at the query's
-       last green row (code changed at some point since), oldest green
-       first.
-    3. UNCHANGED — verified and source-stable; oldest green first so the
-       cohort keeps refreshing.
-
-    TIER-3 FLOOR (VERDICT r11 §Next #2): round 11 proved pure tiering
-    starves the oldest-green cohort — 13 new registrations plus the
-    changed-code tier consumed the whole 50-slot driver window, so
-    queries last verified in r4 stayed unverified for 7 rounds. Tiers
-    0–2 are therefore capped at ``_URGENT_CAP`` of the first
-    ``_DRIVER_WINDOW`` slots; the remainder of the window is reserved
-    for tier 3, oldest green first, so the cohort always drains at
-    ≥15 queries per round no matter how heavy the registration round.
-
-    ``tools/verify_fp.json`` (rebuilt from git trees each round by
-    ``tools/refresh_fingerprints.py``) supplies the historical
-    fingerprints. Any sidecar/fingerprint failure degrades gracefully to
-    the round-only ordering — the driver contract must never break on a
-    provenance bug.
-    """
-    here = record_dir or os.path.dirname(os.path.abspath(__file__))
-    registered: list[str] = []
-    for registry in _REGISTRIES:
-        registered.extend(registry.keys())
-    seen = _last_verified_round(here)
-    repo = os.path.dirname(os.path.abspath(__file__))
-    try:
-        cur = provenance.fingerprint_all(repo)
-        sidecar = json.load(open(os.path.join(here, "tools", "verify_fp.json")))
-        meta = sidecar.get("__meta__", {})
-        latest = meta.get("latest_round", 0)
-    except Exception as exc:  # degrade, but never silently (ADVICE r11)
-        import sys
-
-        print(
-            "WARNING: code-aware verification rotation degraded to "
-            f"round-only ordering ({type(exc).__name__}: {exc}) — "
-            "rewritten operators will not re-verify first; check "
-            "tools/verify_fp.json and plans/provenance.py",
-            file=sys.stderr,
-        )
-        cur, sidecar, latest = {}, {}, 0
-
-    def key(n: str):
-        rnd = seen.get(n, 0)
-        if rnd == 0:
-            return (1, 0, 0)
-        rec = sidecar.get(n) or {}
-        cfp = cur.get(n)
-        head, prev, green_fp = (
-            rec.get("fp_head"),
-            rec.get("fp_prev"),
-            rec.get("fp"),
-        )
-        if cfp and head and cfp != head:
-            return (0, -rnd, 0)  # edited this round
-        if head and prev and head != prev and rnd < latest:
-            return (0, -rnd, 1)  # churned in the latest round, unverified since
-        if cfp and green_fp and cfp != green_fp:
-            return (2, rnd, 0)  # changed at some point since its green row
-        if not (cfp and green_fp):
-            return (2, rnd, 1)  # fingerprint unavailable — treat as suspect
-        return (3, rnd, 0)
-
-    # stable sort: registration order breaks ties so the rotation is
-    # deterministic
-    ordered = sorted(registered, key=key)
-    urgent = [n for n in ordered if key(n)[0] != 3]
-    tier3 = [n for n in ordered if key(n)[0] == 3]
-    # first-registration floor: a mass-edit round can make hundreds of
-    # queries HOT (every transitive fingerprint bumps), which would push
-    # the handful of NEVER-VERIFIED registrations past the urgent cap —
-    # new queries must get their first driver row the round they land,
-    # so up to _NEVER_FLOOR of the urgent slots go to tier 1 first
-    never = [n for n in urgent if key(n)[0] == 1][:_NEVER_FLOOR]
-    never_set = set(never)
-    rest_urgent = [n for n in urgent if n not in never_set]
-    head = (never + rest_urgent)[:_URGENT_CAP]
-    head_set = set(head)
-    reserve = max(0, _DRIVER_WINDOW - len(head))
-    tail_urgent = [n for n in urgent if n not in head_set]
-    return head + tier3[:reserve] + tail_urgent + tier3[reserve:]
-
-
-#: the driver records the first N registry entries per round (observed
-#: window across every CORRECTNESS_r*.json: 50)
-_DRIVER_WINDOW = 50
-#: max window slots tiers 0-2 may consume; the other 15+ always go to the
-#: oldest-green unchanged cohort
-_URGENT_CAP = 35
-#: of the urgent slots, up to this many go to never-verified
-#: registrations FIRST — a mass-edit round floods tier 0 past the cap,
-#: and a new query missing its first-round row is worse than the 30th
-#: hot re-verification
-_NEVER_FLOOR = 8
-
-
 def _flat() -> dict[str, tuple]:
+    """Every registry's entries in registration order; a name registered
+    twice raises instead of the later registry silently replacing it."""
     out: dict[str, tuple] = {}
     for registry in _REGISTRIES:
-        out.update(registry)
+        for name, spec in registry.items():
+            if name in out:
+                raise ValueError(f"query {name!r} is registered twice")
+            out[name] = spec
     return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    flat = _flat()
-    return {name: flat[name][0] for name in _ordered_names()}
+    return {name: spec[0] for name, spec in _flat().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    flat = _flat()
     out: dict[str, str] = {}
-    for name in _ordered_names():
-        sql = flat[name][1]
+    for name, (_, sql) in _flat().items():
         if callable(sql):
             # lazily generated oracles (data-dependent constants, e.g. the
             # IVF centroid literals); may return None → rows-only fallback

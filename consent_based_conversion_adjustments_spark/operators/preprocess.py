@@ -96,20 +96,36 @@ def fit_encoder(
     categorical_cols: list[str],
     numeric_cols: list[str],
     max_categories: int = 10_000,
+    id_cols: list[str] | tuple = (),
 ) -> FeatureEncoder:
     """Collect sorted distinct values per categorical column in ONE job.
 
     reference: the implicit fit inside pd.get_dummies over the concatenated
     frame (preprocess.py:99-102).
+
+    The same job counts null ids and null or NaN numeric features and
+    raises ``ValueError`` naming the column, as sklearn's fit rejects NaN
+    (nearest_consented_customers.py:67).
     """
+    invalid = [(c, "id column", "null", F.col(c).isNull()) for c in id_cols]
+    for c in numeric_cols:
+        x = F.col(c).cast("double")
+        invalid.append((c, "numeric feature column", "null or NaN",
+                        x.isNull() | F.isnan(x)))
     categories: dict[str, tuple] = {}
-    if categorical_cols:
+    if categorical_cols or invalid:
         row = df.select(
             *[
                 F.sort_array(F.collect_set(F.col(c))).alias(c)
                 for c in categorical_cols
-            ]
+            ],
+            *[F.count(F.when(v[3], 1)).alias(f"__bad{i}")
+              for i, v in enumerate(invalid)],
         ).first()
+        for i, (c, role, kind, _) in enumerate(invalid):
+            if row[f"__bad{i}"]:
+                raise ValueError(f"{role} {c!r} has {row[f'__bad{i}']} "
+                                 f"{kind} value(s) — drop or fill them first")
         for c in categorical_cols:
             values = tuple(row[c])
             if len(values) > max_categories:
@@ -186,7 +202,7 @@ def union_encode_split(
         # reference: preprocess.py:52-78 (P8 hook, identity by default)
         df = feature_engineering(df)
     categorical, numeric = infer_feature_columns(df, config)
-    encoder = fit_encoder(df, categorical, numeric)
+    encoder = fit_encoder(df, categorical, numeric, id_cols=config.id_columns)
     encoded = encoder.transform(df, output_col=features_col)
     consent_out = encoded.filter(F.col(CONSENT_FLAG) == 1).drop(CONSENT_FLAG)
     noconsent_out = encoded.filter(F.col(CONSENT_FLAG) == 0).drop(CONSENT_FLAG)

@@ -1,6 +1,7 @@
 """SparkSession builder.
 
-Local defaults match the driver environment (local[32], 128 GiB). The same
+Local defaults are ``local[32]`` and a 48g driver heap;
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override them. The same
 settings are the right starting point on a real cluster: AQE handles runtime
 re-planning (partition coalescing, skew-join splitting), Arrow accelerates
 the few Pandas-UDF operators, and the broadcast threshold governs when the

@@ -208,6 +208,97 @@ def test_empty_noconsent_side_summarizes_zero_matches(spark, tmp_path):
     assert len(open(data_file).read().splitlines()) == 1 + 3
 
 
+def _day(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "gclid string, conversion_date string, conversion_value double, "
+        "a double, item string",
+    )
+
+
+def _csv_rows(pattern):
+    (path,) = glob.glob(pattern)
+    header, *rows = open(path).read().splitlines()
+    return [dict(zip(header.split(","), r.split(","))) for r in rows]
+
+
+@pytest.mark.parametrize("impl", ["sql", "numpy", "grouped"])
+@pytest.mark.parametrize(
+    "column, null_at, message",
+    [
+        ("a", (None, float("nan")),
+         "numeric feature column 'a' has 2 null or NaN value"),
+        ("gclid", (None, None), "id column 'gclid' has 2 null value"),
+    ],
+    ids=["null_feature", "null_id"],
+)
+def test_null_id_or_feature_raises_naming_the_column(
+    spark, tmp_path, impl, column, null_at, message
+):
+    """A null id, or a null or NaN numeric feature, fails every exact route
+    the same way (sklearn's fit rejects NaN): a ValueError naming the date
+    and the column, raised before anything is written for that date. One
+    consent row and one no-consent row carry the bad value."""
+    def side(prefix, a0, bad):
+        rows = [
+            {"gclid": f"{prefix}{i}", "conversion_date": "2021-11-20",
+             "conversion_value": 10.0 + i, "a": a0 + i, "item": "dress"}
+            for i in range(3)
+        ]
+        rows[0][column] = bad
+        return _day(spark, [tuple(r.values()) for r in rows])
+
+    cfg = AdjustmentConfig(
+        conversion_column="conversion_value",
+        id_columns=["gclid"],
+        date_column="conversion_date",
+        number_nearest_neighbors=1,
+    )
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=f"2021-11-20: {message}"):
+        run_dates(
+            spark, side("c", 0.0, null_at[0]), side("n", 1.0, null_at[1]),
+            cfg, ["2021-11-20"], str(out), impl=impl,
+        )
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("impl", ["sql", "numpy", "grouped"])
+def test_radius_matching_nothing_adjusts_nothing(spark, tmp_path, caplog, impl):
+    """A radius below every distance matches no probe: each consent row
+    keeps its conversion (adjusted 0.0, no added conversions, an empty
+    average distance, naive equal to the conversion), the summary counts
+    0 matches, and the unmatched warning counts every probe."""
+    consent = _day(spark, [(f"c{i}", "2021-11-20", 10.0 * (i + 1), float(i),
+                            "dress") for i in range(3)])
+    noconsent = _day(spark, [(f"n{i}", "2021-11-20", 5.0, 10.0 + i, "shoe")
+                             for i in range(2)])
+    cfg = AdjustmentConfig(
+        conversion_column="conversion_value",
+        id_columns=["gclid"],
+        date_column="conversion_date",
+        radius=0.5,
+    )
+    out = str(tmp_path / "out")
+    with caplog.at_level("WARNING"):
+        run_dates(spark, consent, noconsent, cfg, ["2021-11-20"], out, impl=impl)
+    data = _csv_rows(f"{out}/2021-11-20/adjustments_data/*.csv")
+    assert sorted(r["gclid"] for r in data) == ["c0", "c1", "c2"]
+    for r in data:
+        assert float(r["adjusted_conversion"]) == 0.0
+        assert r["n_added_conversions"] == "0"
+        assert r["average_distance"] == ""
+        assert float(r["naive_adjusted_conversion"]) == float(r["conversion_value"])
+    (summary,) = _csv_rows(f"{out}/2021-11-20/adjustments_summary/*.csv")
+    assert summary == {
+        "percentage_matched_conversion_value": "0.0",
+        "percentage_matched_conversions": "0.0",
+        "number_matched_conversions": "0",
+        "total_matched_conversion_value": "0.0",
+    }
+    assert "2021-11-20: 2 probes found no consented customer" in caplog.text
+
+
 def test_per_date_auto_stats_matches_in_loop_counts(spark):
     """r13 (VERDICT r12 §Next #7): the one-pass per-date precount must
     agree exactly with what the in-loop auto resolution would count —
@@ -337,39 +428,3 @@ def test_schema_evolution_merge(spark, tmp_path):
     assert set(merged.columns) == {"id", "name", "score", "batch"}
     rows = {r["id"]: r for r in merged.collect()}
     assert rows[1]["score"] is None and rows[2]["score"] == 9.5
-
-
-def test_rotation_prioritizes_failed_rows(tmp_path):
-    """The verification-window rotation treats a FAILED correctness row
-    (hash mismatch or hard error) as never-verified, so a fixed query
-    re-sorts to the front of the next driver window instead of waiting a
-    full rotation cycle; rows-only records (err == "no_oracle") count as
-    verified."""
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as e
-
-    rec = {
-        "green_q": {"hash_match": True, "rows_match": True,
-                    "schema_match": True, "err": None},
-        "red_hash_q": {"hash_match": False, "rows_match": True,
-                       "schema_match": True, "err": None},
-        "red_err_q": {"hash_match": None, "rows_match": None,
-                      "schema_match": None, "err": "EXCEPTION boom"},
-        "rows_only_q": {"hash_match": None, "rows_match": None,
-                        "schema_match": None, "err": "no_oracle"},
-    }
-    (tmp_path / "CORRECTNESS_r07.json").write_text(json.dumps(rec))
-    seen = e._last_verified_round(str(tmp_path))
-    assert seen.get("green_q") == 7
-    assert seen.get("rows_only_q") == 7
-    assert "red_hash_q" not in seen   # re-verify ASAP
-    assert "red_err_q" not in seen    # re-verify ASAP
-    # a later green row restores normal rotation for a once-red query
-    (tmp_path / "CORRECTNESS_r08.json").write_text(json.dumps(
-        {"red_hash_q": {"hash_match": True, "rows_match": True,
-                        "schema_match": True, "err": None}}
-    ))
-    assert e._last_verified_round(str(tmp_path))["red_hash_q"] == 8
